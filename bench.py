@@ -63,6 +63,25 @@ def _cpu_ticks() -> tuple[int, int]:
         return 0, 0
 
 
+def diverts_from_reference(
+    prev_steal: float | None, new_steal: float | None
+) -> bool:
+    """True when a run must not overwrite the existing reference.
+
+    Never clobber a cleaner (lower-steal) committed reference with a
+    more-contended run — an r15 run at 2.93% steal once overwrote the
+    0.05%-steal gated reference. Such runs go to
+    bench_results/adhoc/ (never committed as references). Unknown steal
+    counts as contended: a run whose steal could not be read is
+    diverted, and a reference without one may be replaced.
+    """
+    if new_steal is None:
+        return True
+    if prev_steal is None:
+        return False
+    return new_steal > max(prev_steal, 0.5)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -124,27 +143,20 @@ def main() -> None:
         rnd = str(max(seen) + 1 if seen else 0)
     fname = f"r{int(rnd):02d}.json"
     target = results_dir / fname
-    # Never clobber a cleaner (lower-steal) committed reference with a
-    # more-contended run — r15's driver run overwrote the 0.05%-steal
-    # gated reference with a 2.93%-steal run. Divert such runs to
-    # bench_results/adhoc/ (never committed as references).
     if target.exists():
         try:
-            prev_steal = json.load(open(target)).get("host_steal_pct")
-        except Exception:
+            with open(target) as f:
+                prev_steal = json.load(f).get("host_steal_pct")
+        except (OSError, ValueError, AttributeError):
             prev_steal = None
         new_steal = out.get("host_steal_pct")
-        if (
-            prev_steal is not None
-            and new_steal is not None
-            and new_steal > max(prev_steal, 0.5)
-        ):
+        if diverts_from_reference(prev_steal, new_steal):
             adhoc = results_dir / "adhoc"
             adhoc.mkdir(exist_ok=True)
             n = len(list(adhoc.glob(f"r{int(rnd):02d}_steal*.json")))
             target = adhoc / f"r{int(rnd):02d}_steal{new_steal}_{n}.json"
             print(
-                f"[bench] steal {new_steal}% > reference {prev_steal}%:"
+                f"[bench] steal {new_steal}% vs reference {prev_steal}%:"
                 f" writing {target} instead of {fname}",
                 file=sys.stderr,
             )

@@ -29,9 +29,15 @@ value-hash comparison against DuckDB is exact, not approximate):
 
 from __future__ import annotations
 
+import json
+import os
+import stat
+import threading
 from collections.abc import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -55,6 +61,16 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a testdata table.
 
+    The file is read through ``read_parquet`` with a known schema, which
+    launches no Spark job: the schema is read from the file's footer in
+    the session's own JVM once and memoized under the file's path, inode, size and
+    ``st_mtime_ns`` plus the session confs that change inference. The
+    memo is file metadata, like Spark's own file-status cache, not
+    result reuse, so it outlives ``cache_scope()``: every action still
+    scans the file, and a rewritten file or a changed conf infers again.
+    Because even the first read launches no job, a read's Spark work
+    does not depend on what earlier reads in the session cached.
+
     ``events.parquet``'s ``ts`` column has shipped in three physical
     encodings across testdata regenerations; normalize every one to a
     session-tz TIMESTAMP so downstream plans (and ``withWatermark``,
@@ -72,11 +88,108 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # pin UTC so timestamp values match the (naive-UTC) DuckDB oracle even
     # when the harness session was built without our get_spark() defaults
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return _normalize_event_time(df)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        return read_parquet(spark, path)
+    # get_spark() sessions already carry this; a bare harness session
+    # keeps it once set, because the scan reads it again at execution
+    spark.conf.set(NANOS_AS_LONG, "true")
+    return _normalize_event_time(read_parquet(spark, path))
+
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+#: the SQLConf getters whose values ``ParquetFileFormat`` hands its
+#: schema converter: the session state that changes what inference
+#: returns (confs ``binaryAsString``, ``int96AsTimestamp``,
+#: ``inferTimestampNTZ.enabled``, ``nanosAsLong`` and
+#: ``reader.respectUnknownTypeAnnotation.enabled``), in converter order
+_INFERENCE_FLAGS = (
+    "isParquetBinaryAsString",
+    "isParquetINT96AsTimestamp",
+    "parquetInferTimestampNTZEnabled",
+    "legacyParquetNanosAsLong",
+    "parquetReaderRespectUnknownTypeAnnotation",
+)
+_SCHEMA_MEMO_MAX = 1024
+_schema_memo: dict[tuple, StructType] = {}
+_schema_memo_lock = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read one parquet file with the schema ``parquet_schema`` resolves;
+    a read with a known schema launches no Spark job."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, memoized.
+
+    A miss reads the file's footer in the session's own JVM
+    (``_footer_schema``), not in the Spark job plain inference launches. The memo key
+    is the file's identity (path, inode, size, ``st_mtime_ns``) plus the
+    session's inference flags, so a rewritten file or a changed conf
+    infers again. A path ``os.stat`` cannot see (``gs://`` on a
+    cluster), a dataset directory (its member files can change under an
+    unchanged directory stat) and a session without a JVM gateway are
+    inferred by Spark on every call.
+    """
+    try:
+        st = os.stat(path)
+        sql_conf = spark._jsparkSession.sessionState().conf()
+    except (OSError, AttributeError):
+        return spark.read.parquet(path).schema
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path).schema
+    flags = tuple(getattr(sql_conf, f)() for f in _INFERENCE_FLAGS)
+    key = (os.path.abspath(path), st.st_ino, st.st_size, st.st_mtime_ns, flags)
+    with _schema_memo_lock:
+        schema = _schema_memo.get(key)
+    if schema is None:
+        try:
+            schema = _footer_schema(spark, path, flags)
+        except Py4JError:
+            # the footer could not be read or converted (INT96 with
+            # int96AsTimestamp off): plain inference raises Spark's own
+            # error for the file, or infers it
+            schema = spark.read.parquet(path).schema
+        with _schema_memo_lock:
+            _schema_memo[key] = schema
+            if len(_schema_memo) > _SCHEMA_MEMO_MAX:
+                del _schema_memo[next(iter(_schema_memo))]
+    return schema
+
+
+def _footer_schema(spark: SparkSession, path: str, flags: tuple) -> StructType:
+    """Spark's parquet inference for one file, run in this process.
+
+    ``ParquetFileFormat.mergeSchemasInParallel`` reads footers in a Spark
+    job and converts each with ``readSchemaFromFooter``; this reads the
+    one footer here and converts it with a converter built exactly as
+    that method builds it (the five flags, the constructor defaults for
+    the rest), so the schema is the same and no job runs.
+    """
+    jvm = spark._jvm
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter_cls = pq.ParquetToSparkSchemaConverter
+
+    def default(i: int) -> bool:
+        return getattr(converter_cls, f"$lessinit$greater$default${i}")()
+
+    binary, int96, ntz, nanos, unknown = flags
+    converter = converter_cls(
+        binary, int96, default(3), ntz, nanos, default(6), default(7), unknown
+    )
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    status = hpath.getFileSystem(hconf).getFileStatus(hpath)
+    metadata = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, hconf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    footer = jvm.org.apache.parquet.hadoop.Footer(status.getPath(), metadata)
+    jschema = pq.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+    # a file source reads every field as nullable, whatever the footer says
+    return StructType.fromJson(json.loads(jschema.asNullable().json()))
 
 
 def _normalize_event_time(df: DataFrame) -> DataFrame:

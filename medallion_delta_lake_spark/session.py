@@ -7,6 +7,8 @@ gold_table_creation.py:16-21) with one parameterized factory that:
 - works in local mode (tests / bench) and on a cluster unchanged;
 - pins the session time zone to UTC so results are comparable across
   engines (DuckDB oracle) and clusters;
+- reads parquet TIMESTAMP(NANOS) as epoch-nanos longs for the whole
+  session, not only from the first events read on;
 - enables AQE + skew-join handling explicitly (we rely on them at scale);
 - enables Arrow for the pandas-UDF extension operators;
 - wires the Delta Lake extension/catalog only when delta-spark is
@@ -60,6 +62,11 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
+        # events.parquet may carry TIMESTAMP(NANOS), which Spark 4 reads
+        # only as longs (registry._normalize_event_time). The scan reads
+        # this conf again when it executes, so it cannot be scoped to one
+        # read; set once here, no events read flips it mid-session.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

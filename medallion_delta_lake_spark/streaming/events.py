@@ -43,11 +43,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata was generated, and all three are coerced to TIMESTAMP
     (``withWatermark`` hard-rejects TIMESTAMP_NTZ; session tz is pinned
     UTC so the NTZ→TZ cast preserves wall-clock values exactly)."""
-    from ..plans.registry import _normalize_event_time
+    from ..plans.registry import NANOS_AS_LONG, _normalize_event_time, parquet_schema
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NANOS_AS_LONG, "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     sdf = spark.readStream.schema(schema).parquet(_events_stream_dir(sf_dir))
     return _normalize_event_time(sdf)
 

@@ -39,3 +39,15 @@ def _release_tracked_caches():
     from medallion_delta_lake_spark.operators.caching import release_caches
 
     release_caches()
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say what the default fast tier (``-m "not slow"``, pytest.ini)
+    left out, so a green fast run is not read as a green full suite."""
+    if config.option.markexpr != "not slow":
+        return
+    deselected = len(terminalreporter.stats.get("deselected", []))
+    terminalreporter.write_line(
+        f"fast tier: {deselected} slow tests deselected; full tier: "
+        'python -m pytest tests/ -q -m "slow or not slow"'
+    )

@@ -1,10 +1,10 @@
 """Deterministic Enefit-shaped fixture generator (FIXTURES.md).
 
 Writes the reference pipeline's raw landing files (7 CSVs + 1 JSON) to
-a directory: hourly grids over N_DAYS, counties including the filtered
-id 12, ~1% planted exact duplicates, ~1% NULL measures, unlabeled
-stations for the nn-assignment, duplicate weather grain rows for the
-silver averaging step.
+a directory: hourly grids over ``days`` (default N_DAYS) days, counties
+including the filtered id 12, ~1% planted exact duplicates, ~1% NULL
+measures, unlabeled stations for the nn-assignment, duplicate weather
+grain rows for the silver averaging step.
 """
 
 from __future__ import annotations
@@ -37,10 +37,13 @@ def _w(path, header, rows):
         w.writerows(rows)
 
 
-def generate(landing_dir: str, seed: int = 7) -> None:
+def generate(landing_dir: str, seed: int = 7, days: int | None = None) -> None:
+    """Write the landing files for ``days`` days (default: ``N_DAYS``,
+    read at call time so a caller that patches the global still works)."""
+    n_days = N_DAYS if days is None else days
     rng = random.Random(seed)
-    hours = [T0 + timedelta(hours=h) for h in range(N_DAYS * 24)]
-    days = [T0 + timedelta(days=d) for d in range(N_DAYS)]
+    hours = [T0 + timedelta(hours=h) for h in range(n_days * 24)]
+    dates = [T0 + timedelta(days=d) for d in range(n_days)]
 
     # train: hourly × county × business × product × consumption
     rows = []
@@ -90,7 +93,7 @@ def generate(landing_dir: str, seed: int = 7) -> None:
 
     # client: daily dimension (skip one combo to create post-join nulls)
     rows = []
-    for d, day in enumerate(days):
+    for d, day in enumerate(dates):
         for county in COUNTIES:
             for biz in (0, 1):
                 for prod in PRODUCTS:
@@ -139,7 +142,7 @@ def generate(landing_dir: str, seed: int = 7) -> None:
 
     # gas: one row per day
     rows = []
-    for d, day in enumerate(days):
+    for d, day in enumerate(dates):
         lo = round(rng.uniform(20, 60), 2)
         rows.append(
             [
@@ -214,7 +217,7 @@ def generate(landing_dir: str, seed: int = 7) -> None:
         "data_block_id",
     ]
     rows = []
-    for d, day in enumerate(days):
+    for d, day in enumerate(dates):
         for lat, lon, _, _ in STATIONS:
             for ha in range(0, 73, 6):
                 rows.append(

@@ -96,12 +96,7 @@ def test_incremental_new_day_flows_through(spark, tmp_path_factory):
 
     # extend the feed by one day and re-land (bronze appends; silver
     # dedup absorbs the overlap)
-    old_days = fx.N_DAYS
-    fx.N_DAYS = old_days + 1
-    try:
-        fx.generate(landing)
-    finally:
-        fx.N_DAYS = old_days
+    fx.generate(landing, days=fx.N_DAYS + 1)
     gold2 = medallion.run_all(spark, landing, base)
     rows2 = {tuple(r) for r in gold2.collect()}
     blocks2 = {r.data_block_id for r in gold2.select("data_block_id").distinct().collect()}
