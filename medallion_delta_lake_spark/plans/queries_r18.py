@@ -211,6 +211,61 @@ def stream_cdf_tail_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream-cdf-replica
 
 
+def fold_changes(
+    spark: SparkSession,
+    batch: DataFrame,
+    replica: str,
+    key: str,
+    data_cols: list[str],
+) -> None:
+    """Fold one change-feed batch into the log-backed ``replica``
+    through the file-scoped MERGE: the last action per ``key`` wins —
+    a delete removes the key, anything else replaces or inserts it.
+
+    Preimages are dropped and the newest ``_commit_version`` wins.
+    Within one version the added row (insert or postimage) is the state
+    after the commit, so it beats a delete; two added rows of one key
+    in one version are ordered by their data columns. The replica is
+    thus a function of the feed, not of how its rows are partitioned."""
+    from medallion_delta_lake_spark.sources import delta_log as dl
+
+    w = Window.partitionBy(key).orderBy(
+        F.col("_commit_version").desc(),
+        (F.col("_change_type") != "delete").desc(),
+        *[F.col(c).desc() for c in data_cols if c != key],
+    )
+    latest = (
+        batch.filter(F.col("_change_type") != "update_preimage")
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select(*data_cols, "_change_type")
+    )
+    dl.merge_delta_log(
+        spark,
+        latest,
+        replica,
+        [key],
+        [
+            {
+                "when": "matched",
+                "action": "delete",
+                "condition": "s._change_type = 'delete'",
+            },
+            {
+                "when": "matched",
+                "action": "update",
+                "set": {c: f"s.`{c}`" for c in data_cols if c != key},
+            },
+            {
+                "when": "not_matched",
+                "action": "insert",
+                "condition": "s._change_type <> 'delete'",
+                "values": {c: f"s.`{c}`" for c in data_cols},
+            },
+        ],
+    )
+
+
 @draft(
     "stream-cdf-replica",
     # the replica's final state must equal the source's: m in (1,2),
@@ -306,41 +361,7 @@ def stream_cdf_replica_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_cols = ["event_id", "event_type", "cents"]
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy("event_id").orderBy(
-            F.col("_commit_version").desc()
-        )
-        latest = (
-            batch.filter(F.col("_change_type") != "update_preimage")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*data_cols, "_change_type")
-        )
-        dl.merge_delta_log(
-            spark,
-            latest,
-            rep,
-            ["event_id"],
-            [
-                {
-                    "when": "matched",
-                    "action": "delete",
-                    "condition": "s._change_type = 'delete'",
-                },
-                {
-                    "when": "matched",
-                    "action": "update",
-                    "set": {
-                        c: f"s.`{c}`" for c in data_cols if c != "event_id"
-                    },
-                },
-                {
-                    "when": "not_matched",
-                    "action": "insert",
-                    "condition": "s._change_type <> 'delete'",
-                    "values": {c: f"s.`{c}`" for c in data_cols},
-                },
-            ],
-        )
+        fold_changes(spark, batch, rep, "event_id", data_cols)
 
     q = (
         spark.readStream.format(pds.FORMAT_NAME)

@@ -1145,17 +1145,7 @@ def read_delta_row_ids(
         keep_positions=True,
         extra_phys_cols=[id_col, cv_col],
     )
-    base_rows = [
-        (
-            os.path.basename(rel),
-            add.get("baseRowId"),
-            add.get("defaultRowCommitVersion"),
-        )
-        for rel, add in snap["files"].items()
-    ]
-    base = spark.createDataFrame(
-        base_rows, f"{_DV_BASE} string, __base_rid long, __dflt_rcv long"
-    )
+    base = _row_base_map(spark, snap["files"])
     out_cols = [
         f.name
         for f in StructType.fromJson(
@@ -1163,7 +1153,7 @@ def read_delta_row_ids(
         ).fields
     ]
     return (
-        df.join(F.broadcast(base), _DV_BASE)
+        df.join(F.broadcast(base), _DV_PATH)
         .select(
             *out_cols,
             F.coalesce(
@@ -1174,6 +1164,18 @@ def read_delta_row_ids(
                 "_row_commit_version"
             ),
         )
+    )
+
+
+def _row_base_map(spark: SparkSession, files: dict) -> DataFrame:
+    """(file path, baseRowId, defaultRowCommitVersion) per add action,
+    keyed like the scan's ``_DV_PATH`` column for a broadcast join."""
+    return spark.createDataFrame(
+        [
+            (rel, add.get("baseRowId"), add.get("defaultRowCommitVersion"))
+            for rel, add in files.items()
+        ],
+        f"{_DV_PATH} string, __base_rid long, __dflt_rcv long",
     )
 
 
@@ -1269,7 +1271,7 @@ def read_delta(
 
 # helper columns for deletion-vector subtraction — stripped before the
 # scan result leaves _scan_adds
-_DV_BASE, _DV_RID = "__dv_file_base", "__dv_row_index"
+_DV_PATH, _DV_RID = "__dv_file_path", "__dv_row_index"
 
 _HIVE_SAFE = frozenset(
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789_.-"
@@ -1328,9 +1330,12 @@ def _scan_adds(
     """DataFrame over exactly the given add actions, with partition
     columns reattached at their declared types, name-mode column
     mapping resolved, and deletion-vector rows subtracted.
-    ``keep_positions`` retains the ``_DV_BASE``/``_DV_RID`` physical
-    position columns in the result (the DELETE writer needs them to
-    build new deletion vectors). ``extra_phys_cols`` reads the named
+    ``keep_positions`` retains the ``_DV_PATH``/``_DV_RID`` physical
+    position columns in the result: each row's data file, keyed by its
+    add action's path (table-relative, or absolute for a shallow
+    clone's files), and its row index within that file — the DELETE,
+    UPDATE and MERGE writers find touched files and build deletion
+    vectors from them. ``extra_phys_cols`` reads the named
     PHYSICAL-ONLY long columns (row tracking's materialized id /
     commit-version columns) — null-filled for files that lack them.
 
@@ -1375,7 +1380,7 @@ def _scan_adds(
     )
     if not files:
         # Honor the keep_positions contract even with zero live files:
-        # callers (DELETE/MERGE writers) select _DV_BASE/_DV_RID
+        # callers (DELETE/MERGE writers) select _DV_PATH/_DV_RID
         # unconditionally, and an empty frame missing them raises
         # UNRESOLVED_COLUMN — bricking sync-merge after an empty sync.
         empty_schema = StructType(
@@ -1385,7 +1390,7 @@ def _scan_adds(
             empty_schema = StructType(
                 list(empty_schema.fields)
                 + [
-                    StructField(_DV_BASE, StringType(), True),
+                    StructField(_DV_PATH, StringType(), True),
                     StructField(_DV_RID, LongType(), True),
                 ]
             )
@@ -1397,30 +1402,43 @@ def _scan_adds(
         if add.get("deletionVector")
     }
 
+    # every file is handed to the scan as ``root/<add path>``, so the
+    # scan's ``_metadata.file_path`` is ``file:`` + that path with
+    # Hadoop's URI escaping (space → %20, % → %25; + stays literal)
+    root = os.path.abspath(path)
+    prefix = root.rstrip("/") + "/"
+
     def _attach_meta(df: DataFrame) -> DataFrame:
-        """Per-row physical position, for DV subtraction: the parquet
-        scan's hidden ``_metadata`` struct yields the row index within
-        the file and the file path (basename suffices — data-file names
-        are uuid-unique table-wide, asserted below)."""
+        """Per-row physical position, for DV subtraction and touched-
+        file tracking: the parquet scan's hidden ``_metadata`` struct
+        yields the row index within the file and the file's URI, which
+        is decoded and made relative to the table root — the add
+        action's own path, so files sharing a basename across partition
+        directories (one Spark task writing every partition) stay
+        distinct."""
         if not (dv_files or keep_positions):
             return df
+        local = F.url_decode(
+            F.regexp_replace(
+                F.regexp_replace(
+                    F.col("_metadata.file_path"), "^file:/+", "/"
+                ),
+                r"\+",
+                "%2B",
+            )
+        )
         return df.select(
             "*",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias(_DV_BASE),
+            F.when(
+                local.startswith(prefix),
+                local.substr(len(prefix) + 1, 1 << 30),
+            )
+            .otherwise(local)
+            .alias(_DV_PATH),
             F.col("_metadata.row_index").alias(_DV_RID),
         )
 
-    if dv_files:
-        bases = [os.path.basename(rel) for rel in files]
-        if len(set(bases)) != len(bases):
-            raise DeltaProtocolError(
-                "duplicate data-file basenames in a table with deletion "
-                "vectors; cannot key DV subtraction by file"
-            )
-
-    extras = [_DV_BASE, _DV_RID] if (dv_files or keep_positions) else []
+    extras = [_DV_PATH, _DV_RID] if (dv_files or keep_positions) else []
 
     def _read_group(
         rels: list[str],
@@ -1445,7 +1463,7 @@ def _scan_adds(
         )
         raw = _attach_meta(
             spark.read.schema(read_schema).parquet(
-                *[os.path.join(path, r) for r in rels]
+                *[os.path.join(root, r) for r in rels]
             )
         )
         return raw.select(
@@ -1487,18 +1505,18 @@ def _scan_adds(
         # DataFrame, not a 10 000-way driver-built union (the grouped
         # fallback below stays for arbitrary add-file layouts, which
         # the protocol permits).
-        paths = [os.path.join(path, p) for p in files]
+        paths = [os.path.join(root, p) for p in files]
         out = _attach_meta(
             spark.read.schema(
                 StructType(list(clean_schema.fields) + extra_fields)
             )
-            .option("basePath", path)
+            .option("basePath", root)
             .parquet(*paths)
         ).select(
             *(
                 [f.name for f in clean_schema.fields]
                 + [f.name for f in extra_fields]
-                + ([_DV_BASE, _DV_RID] if (dv_files or keep_positions) else [])
+                + ([_DV_PATH, _DV_RID] if (dv_files or keep_positions) else [])
             )
         )
     else:
@@ -1554,9 +1572,10 @@ def _subtract_dvs(
     drop: bool = True,
 ) -> DataFrame:
     """Drop the rows flagged by each file's deletion vector: resolve
-    every descriptor to its row indexes, build a (file basename, row
-    index) table, and broadcast anti-join it against the scan on the
-    hidden position columns.
+    every descriptor to its row indexes, build a (file path, row index)
+    table keyed by each file's add-action path — the same key
+    :func:`_scan_adds` derives from the scan's ``_metadata`` — and
+    broadcast anti-join it against the scan on those position columns.
 
     Scale contract: DV resolution is O(total deleted rows) driver-side
     metadata — the same order as delta-spark's own broadcast of DV
@@ -1567,19 +1586,19 @@ def _subtract_dvs(
     from medallion_delta_lake_spark.sources import deletion_vectors as _dv
 
     pairs = [
-        (os.path.basename(rel), int(idx))
+        (rel, int(idx))
         for rel, desc in sorted(dv_files.items())
         for idx in _dv.dv_row_indexes(path, desc)
     ]
     deleted = spark.createDataFrame(
-        pairs, f"{_DV_BASE} string, {_DV_RID} bigint"
+        pairs, f"{_DV_PATH} string, {_DV_RID} bigint"
     )
     keep = df.join(
         F.broadcast(deleted),
-        on=[_DV_BASE, _DV_RID],
+        on=[_DV_PATH, _DV_RID],
         how="left_anti",
     )
-    return keep.drop(_DV_BASE, _DV_RID) if drop else keep
+    return keep.drop(_DV_PATH, _DV_RID) if drop else keep
 
 
 def _discover_compactions(log: str) -> list[tuple[int, int]]:
@@ -1686,10 +1705,16 @@ def _list_versions(log: str) -> list[int]:
 
 
 def _rel_partition_values(rel: str, part_cols: list[str]) -> dict:
+    """partitionValues from a hive path: ``col=value`` directories,
+    with Hive's path escaping undone (Spark writes ``:`` as ``%3A`` and
+    ``%`` as ``%25``, so a timestamp value round-trips)."""
+    from urllib.parse import unquote
+
     vals: dict[str, str | None] = {}
     for seg in rel.split(os.sep)[:-1]:
         if "=" in seg:
             k, _, v = seg.partition("=")
+            k, v = unquote(k), unquote(v)
             if k in part_cols:
                 vals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
     return vals
@@ -2926,99 +2951,6 @@ def write_delta(
     return _commit_version(path, build, read_version=read_version)
 
 
-def _touched_partitions(
-    target: DataFrame,
-    src: DataFrame,
-    keys: list[str],
-    part_cols: list[str],
-    delete_missing: bool,
-) -> list[dict]:
-    """Distinct partition tuples (as partitionValues-style string
-    dicts) whose content a MERGE of ``src`` into ``target`` changes:
-    partitions receiving inserts, partitions holding keys the source
-    deletes, and — for updated keys — BOTH the old and new partition
-    (a changed partition-column value moves the row between
-    directories).
-
-    Shape: each side is projected to (keys, partition strings, one
-    64-bit fingerprint of the non-key columns) — text/payload never
-    shuffles — then one full-outer join on the keys and one distinct
-    over the emitted partition tuples. The collect is O(distinct
-    touched partitions), driver-side commit metadata of the same order
-    as the transaction log itself."""
-    non_keys = [c for c in src.columns if c not in keys]
-
-    def side(df: DataFrame, tag: str) -> DataFrame:
-        fp = (
-            F.xxhash64(F.to_json(F.struct(*[F.col(c) for c in non_keys])))
-            if non_keys
-            else F.lit(0).cast("long")
-        )
-        pv = F.struct(
-            *[F.col(c).cast("string").alias(c) for c in part_cols]
-        )
-        return df.select(
-            *keys, fp.alias(f"_{tag}_fp"), pv.alias(f"_{tag}_pv")
-        )
-
-    j = side(target, "t").join(side(src, "s"), on=keys, how="full_outer")
-    t_present = F.col("_t_fp").isNotNull()
-    s_present = F.col("_s_fp").isNotNull()
-    insert = s_present & ~t_present
-    delete = (t_present & ~s_present) if delete_missing else F.lit(False)
-    update = t_present & s_present & (F.col("_t_fp") != F.col("_s_fp"))
-    rows = (
-        j.select(
-            F.explode(
-                F.array(
-                    F.when(insert | update, F.col("_s_pv")),
-                    F.when(delete | update, F.col("_t_pv")),
-                )
-            ).alias("pv")
-        )
-        .filter(F.col("pv").isNotNull())
-        .select("pv.*")
-        .distinct()
-        .collect()
-    )
-    return [r.asDict() for r in rows]
-
-
-def _filter_to_partitions(
-    df: DataFrame, part_cols: list[str], touched: list[dict]
-) -> DataFrame:
-    """Restrict ``df`` to rows whose partition tuple is in ``touched``
-    (string-compared, null-safe — matching partitionValues encoding).
-    For very wide touch sets a broadcast semi-join replaces the OR
-    predicate so the filter expression stays bounded."""
-    if not touched:
-        return df.limit(0)
-    if len(touched) <= 256:
-        conds = []
-        for pv in touched:
-            c = None
-            for col in part_cols:
-                piece = F.col(col).cast("string").eqNullSafe(
-                    F.lit(pv[col])
-                )
-                c = piece if c is None else c & piece
-            conds.append(c)
-        return df.filter(reduce(lambda a, b: a | b, conds))
-    spark = df.sparkSession
-    pv_df = spark.createDataFrame(
-        [tuple(pv[c] for c in part_cols) for pv in touched],
-        ", ".join(f"`{c}` string" for c in part_cols),
-    )
-    on = reduce(
-        lambda a, b: a & b,
-        [
-            F.col(c).cast("string").eqNullSafe(pv_df[c])
-            for c in part_cols
-        ],
-    )
-    return df.join(F.broadcast(pv_df), on=on, how="left_semi")
-
-
 def _upsert_file_scoped(
     spark: SparkSession,
     src: DataFrame,
@@ -3032,9 +2964,7 @@ def _upsert_file_scoped(
     logged min/max range on the leading key can overlap the source's
     key range are rewritten — every other add action rides through the
     commit untouched, so a small-batch merge into a huge table is
-    O(touched files), not O(table) (and not even O(partition): this
-    is the stats-granular refinement of the partition-scoped path,
-    the remaining gap named by the round-5 review).
+    O(touched files), not O(table) and not O(partition).
 
     Two pruning passes, both sound (delta-spark's own findTouchedFiles
     shape): (1) drop files whose logged [min, max] on the leading key
@@ -3092,27 +3022,18 @@ def _upsert_file_scoped(
     )
     touched: dict = {}
     if candidates:
-        by_base = {os.path.basename(rel): rel for rel in candidates}
-        if len(by_base) != len(candidates):
-            touched = candidates  # ambiguous basenames: no refinement
-        else:
-            hit_bases = (
-                _scan_adds(
-                    spark, path, meta, candidates, keep_positions=True
-                )
-                .join(
-                    F.broadcast(src.select(*keys).distinct()),
-                    on=keys,
-                    how="left_semi",
-                )
-                .select(_DV_BASE)
-                .distinct()
-                .collect()
+        hits = (
+            _scan_adds(spark, path, meta, candidates, keep_positions=True)
+            .join(
+                F.broadcast(src.select(*keys).distinct()),
+                on=keys,
+                how="left_semi",
             )
-            touched = {
-                by_base[r[_DV_BASE]]: candidates[by_base[r[_DV_BASE]]]
-                for r in hit_bases
-            }
+            .select(_DV_PATH)
+            .distinct()
+            .collect()
+        )
+        touched = {r[_DV_PATH]: candidates[r[_DV_PATH]] for r in hits}
     now_ms = int(_time.time() * 1000)
     adds: list[dict] = []
     if src_rows:
@@ -3164,40 +3085,57 @@ def _upsert_sync_file_scoped(
     snap: dict,
     part_cols: list[str],
 ) -> int:
-    """FILE-granular MERGE for ``delete_missing=True`` (round-7: the
-    last O(table)- and O(partition)-rewrite postures). A full-source
+    """FILE-granular full-source sync MERGE (``delete_missing=True``)
+    in one pass: only files holding a deleted or changed row are
+    rewritten, delta-spark's findTouchedFiles granularity. A full-source
     sync must see every target key (any file may hold a key the source
-    deleted), so pruning cannot cut the *scan* — but it can cut the
-    *rewrite*: one column-pruned pass over (keys, non-key fingerprint,
-    file) classifies each target row as deleted / changed / unchanged,
-    and only files holding a deleted or changed row are rewritten —
-    delta-spark's own findTouchedFiles granularity. Inserts land in
-    new files (hive-partitioned when the table is). A 2-key delta
-    against a 1000-file table commits remove/add for the few touched
-    files; the other 998 add actions ride through untouched — and in a
-    100-file partition a 1-key update rewrites 1 file, not 100 (the
-    partition-scoped r6 posture).
+    deleted), so pruning cannot cut the *scan*, but it cuts the
+    *rewrite*: a 2-key delta against a 1000-file table removes and
+    re-adds the few files holding those keys, and the other add
+    actions ride through the commit untouched.
 
-    Shape: target side is projected to (keys, 64-bit fingerprint,
-    file basename) — payload never shuffles; ONE left join against the
-    same projection of the source finds the touched files (collect is
-    O(touched files), commit-metadata-sized); the rewrite content is
-    ``src`` semi-joined to the touched files' keys plus ``src``
-    anti-joined to all target keys (brand-new keys) — the same
-    merge-state algebra as merge_state, at file grain. A changed
-    partition-column value changes the fingerprint, so a moved row's
-    old file rewrites and its new row lands in the new directory."""
+    Shape — the source and the target are each evaluated ONCE:
+
+    1. one full-outer join on the keys of the target projection (keys,
+       a 64-bit fingerprint of the non-key columns, the row's file
+       path, its copy number among target rows of that key) with the
+       whole source (every column plus its fingerprint), each joined
+       row classified as deleted / updated / to-stage;
+    2. that join materialized once with ``localCheckpoint`` (storage
+       level MEMORY_AND_DISK: it spills rather than fails at scale; a
+       ``persist()`` would keep all the join's shuffle partitions and
+       fan every later write out into that many tasks and files). An
+       ``Observation`` on it aggregates, in the checkpoint's own job,
+       the touched files, the files holding a row to stage and the
+       inserted / updated / deleted row counts — no collect, no extra
+       Spark job — which decide the commit and give its
+       ``operationMetrics``;
+    3. ONE write of exactly the source rows whose key is new or sits
+       in a touched file (skipped when there are none).
+
+    The checkpoint's blocks are released when the upsert ends, whether
+    it commits or raises. Edge cases follow the sync contract — the
+    table becomes the source, one row per key: a key held by several
+    target rows keeps its first copy (by file path and row index) as
+    the update candidate and deletes the others, so the source row is
+    written once; NULL keys never match (the target's NULL-key rows
+    are deleted, the source's inserted); a changed partition-column
+    value changes the fingerprint, so the row's old file is rewritten
+    and the row lands in its new directory."""
     import time as _time
 
+    from pyspark.sql import Observation, Window
+
+    t0 = _time.monotonic()
     meta = snap["meta"]
     files = snap["files"]
-    by_base = {os.path.basename(rel): rel for rel in files}
-    non_keys = [c for c in src.columns if c not in keys]
+    cols = src.columns
+    non_keys = [c for c in cols if c not in keys]
 
     def fp(df: DataFrame):
         return (
             F.xxhash64(
-                F.to_json(F.struct(*[F.col(c) for c in non_keys]))
+                F.to_json(F.struct(*[df[c] for c in non_keys]))
             )
             if non_keys
             else F.lit(0).cast("long")
@@ -3205,47 +3143,71 @@ def _upsert_sync_file_scoped(
 
     scanned = _scan_adds(spark, path, meta, files, keep_positions=True)
     tgt = scanned.select(
-        *keys, fp(scanned).alias("_t_fp"), F.col(_DV_BASE)
+        *keys,
+        fp(scanned).alias("__t_fp"),
+        F.col(_DV_PATH).alias("__t_file"),
+        F.row_number()
+        .over(Window.partitionBy(*keys).orderBy(_DV_PATH, _DV_RID))
+        .alias("__t_copy"),
     )
-    s_side = src.select(*keys, fp(src).alias("_s_fp"))
-    j = tgt.join(s_side, on=keys, how="left")
-    touched_bases = [
-        r[_DV_BASE]
-        for r in j.filter(
-            F.col("_s_fp").isNull()  # key absent from source: delete
-            | (F.col("_s_fp") != F.col("_t_fp"))  # changed: update
+    joined = tgt.join(
+        src.select(*cols, fp(src).alias("__s_fp")), on=keys, how="full_outer"
+    )
+    t_in = F.col("__t_file").isNotNull()
+    s_in = F.col("__s_fp").isNotNull()
+    first = F.col("__t_copy") == 1
+    deleted = t_in & ~(s_in & first)
+    updated = t_in & s_in & first & (F.col("__t_fp") != F.col("__s_fp"))
+    stage = s_in & (~t_in | first)
+    # the classification rides the checkpoint's own job: touched files
+    # (holding a deleted or changed row), files with a row to stage,
+    # and the row counts. Sets and positivity decide the commit, so a
+    # re-run task's double-counted accumulator can only skew metrics.
+    seen = Observation()
+    ck = (
+        joined.observe(
+            seen,
+            F.collect_set(F.when(deleted | updated, F.col("__t_file"))).alias(
+                "touched"
+            ),
+            F.collect_set(F.when(stage, F.col("__t_file"))).alias("staged"),
+            F.count_if(deleted).alias("deleted"),
+            F.count_if(updated).alias("updated"),
+            F.count_if(stage & ~t_in).alias("inserted"),
         )
-        .select(_DV_BASE)
-        .distinct()
-        .collect()
-    ]
-    touched = {by_base[b]: files[by_base[b]] for b in touched_bases}
-    now_ms = int(_time.time() * 1000)
-
-    # rewrite content: source rows replacing the touched files' keys,
-    # plus brand-new keys (not in ANY target file). Unchanged rows of
-    # untouched files never move.
-    touched_keys = (
-        _scan_adds(spark, path, meta, touched).select(*keys).distinct()
-        if touched
-        else None
+        .select(*cols, "__t_file", stage.alias("__stage"))
+        .localCheckpoint(eager=True)
     )
-    inserts = src.join(
-        scanned.select(*keys).distinct(), on=keys, how="left_anti"
-    )
-    new_content = (
-        src.join(touched_keys, on=keys, how="left_semi").unionByName(
-            inserts
-        )
-        if touched_keys is not None
-        else inserts
-    )
-    adds = [
-        a
-        for a in _stage_physical(new_content, path, meta, part_cols, now_ms)
-        if not a["add"].get("stats")
-        or json.loads(a["add"]["stats"]).get("numRecords", 1)
-    ]
+    try:
+        counts = seen.get
+        touched = {rel: files[rel] for rel in counts["touched"]}
+        now_ms = int(_time.time() * 1000)
+        adds = []
+        if counts["inserted"] or touched.keys() & set(counts["staged"]):
+            content = ck.filter(
+                F.col("__stage")
+                & (
+                    F.col("__t_file").isNull()
+                    | F.col("__t_file").isin(list(touched))
+                )
+            ).select(*cols)
+            adds = [
+                a
+                for a in _stage_physical(content, path, meta, part_cols, now_ms)
+                if _add_num_records(a["add"]) != 0
+            ]
+    finally:
+        # a checkpointed frame's unpersist() is a no-op: free the
+        # blocks of the RDD its plan wraps
+        ck._jdf.queryExecution().analyzed().rdd().unpersist(True)
+    metrics = {
+        "numTargetRowsInserted": counts["inserted"],
+        "numTargetRowsUpdated": counts["updated"],
+        "numTargetRowsDeleted": counts["deleted"],
+        "numTargetFilesAdded": len(adds),
+        "numTargetFilesRemoved": len(touched),
+        "numOutputRows": sum(_add_num_records(a["add"]) or 0 for a in adds),
+    }
 
     def build(version: int) -> list[dict]:
         actions = [
@@ -3253,6 +3215,7 @@ def _upsert_sync_file_scoped(
             for rel in touched
         ]
         actions.extend(adds)
+        metrics["executionTimeMs"] = int((_time.monotonic() - t0) * 1000)
         actions.append(
             {
                 "commitInfo": {
@@ -3261,6 +3224,10 @@ def _upsert_sync_file_scoped(
                         "predicate": json.dumps(keys),
                         "filesRewritten": len(touched),
                         "scope": "file-sync",
+                    },
+                    # Delta's shape: every metric value is a string
+                    "operationMetrics": {
+                        k: str(v) for k, v in metrics.items()
                     },
                 }
             }
@@ -3275,9 +3242,15 @@ def _upsert_sync_file_scoped(
         path,
         build,
         read_version=snap["version"],
-        our_removed=set(snap["files"]),
+        our_removed=set(files),
         add_conflicts=lambda add: True,
     )
+
+
+def _add_num_records(add: dict) -> int | None:
+    """``numRecords`` from an add action's logged stats (None without)."""
+    stats = add.get("stats")
+    return json.loads(stats).get("numRecords") if stats else None
 
 
 def upsert_delta_log(
@@ -3294,16 +3267,24 @@ def upsert_delta_log(
     against a REAL log-backed Delta table, without delta-spark.
     Returns the committed version.
 
-    Full-source syncs are **file-granular** (round 7,
-    :func:`_upsert_sync_file_scoped`) — the granularity of Delta's own
-    MERGE (touched-file rewrite, silver_table_creation.py:47-66): one
-    column-pruned key/fingerprint pass classifies every row, and only
-    files holding a deleted or changed key are rewritten — partitioned
-    or not. A 1-key merge into a 10 000-file table is O(1 file) of
-    I/O, not O(table) and not O(partition). Tables with ambiguous
-    data-file basenames (a third-party layout this engine never
-    produces) fall back to the r6 partition-scoped rewrite
-    (:func:`_touched_partitions`) or, unpartitioned, a full overwrite.
+    Both forms are **file-granular** — the granularity of Delta's own
+    MERGE (touched-file rewrite, silver_table_creation.py:47-66).
+    Data files are keyed by their add action's table-relative path, so
+    any layout the protocol allows works, including one Spark task's
+    same-named files across partition directories (what
+    :func:`convert_to_delta` of a Spark-written table holds).
+
+    - ``delete_missing=True`` (full-source sync,
+      :func:`_upsert_sync_file_scoped`): one join of the target's
+      key/fingerprint projection with the source, materialized once
+      (its job also classifies the rows, through an ``Observation``),
+      and one write of the rows of touched files plus inserts. The
+      commit carries Delta-style
+      ``operationMetrics`` (rows inserted/updated/deleted, files
+      added/removed, output rows, execution ms).
+    - ``delete_missing=False`` (incremental upsert,
+      :func:`_upsert_file_scoped`): stats-pruned candidates, then a
+      semi-join marks the files actually holding a source key.
 
     Crash safety beats the directory-swap fallback: new data files are
     invisible until the single O_EXCL commit file lands, so a crash at
@@ -3313,8 +3294,6 @@ def upsert_delta_log(
     no-change merge still commits (commitInfo-only) so every upsert
     call maps to one time-travelable version.
     """
-    import time as _time
-
     from medallion_delta_lake_spark.operators import upsert as upsert_mod
 
     keys = list(keys)
@@ -3335,80 +3314,8 @@ def upsert_delta_log(
     # constraints only commit after validating existing data), so
     # checking the source increment is sufficient
     _enforce_invariants(src, snap["meta"], path)
-    if not delete_missing:
-        # incremental merge: stats-pruned FILE-granular rewrite (no
-        # full-table pass; see _upsert_file_scoped). delete-if-absent
-        # merges must see every key, so they take the partition/full
-        # paths below.
-        return _upsert_file_scoped(spark, src, path, keys, snap, part_cols)
-    by_base = {os.path.basename(rel): rel for rel in snap["files"]}
-    if len(by_base) == len(snap["files"]):
-        # full-source sync, FILE-granular (round-7): only files holding
-        # a deleted or changed key are removed/re-added; everything
-        # else — including sibling files of touched partitions — rides
-        # through the commit untouched
-        return _upsert_sync_file_scoped(
-            spark, src, path, keys, snap, part_cols
-        )
-    if not part_cols:
-        # ambiguous basenames (third-party layout), nothing to scope to
-        return write_delta(
-            spark,
-            src,
-            path,
-            mode="overwrite",
-            _expect_version=snap["version"],
-        )
-    # ambiguous basenames on a partitioned table: partition-scoped
-    # rewrite (rows cannot be attributed to files, but they can to
-    # partitions via the partition columns themselves)
-    target = read_delta(spark, path)
-    state = upsert_mod.merge_state(target, src, keys, delete_missing)
-
-    touched = _touched_partitions(
-        target, src, keys, part_cols, delete_missing
-    )
-    now_ms = int(_time.time() * 1000)
-    adds = (
-        _stage_physical(
-            _filter_to_partitions(state, part_cols, touched),
-            path,
-            snap["meta"],
-            part_cols,
-            now_ms,
-        )
-        if touched
-        else []
-    )
-    touched_set = {
-        tuple(pv[c] for c in part_cols) for pv in touched
-    }
-
-    def build(version: int) -> list[dict]:
-        prior = resolve_snapshot(path, version_as_of=version - 1)
-        removes = [
-            {"remove": _remove_action(rel, a, now_ms)}
-            for rel, a in prior["files"].items()
-            if tuple(
-                (a.get("partitionValues") or {}).get(c)
-                for c in part_cols
-            )
-            in touched_set
-        ]
-        info = {
-            "commitInfo": {
-                "operation": "MERGE",
-                "operationParameters": {
-                    "predicate": json.dumps(keys),
-                    "partitionsRewritten": len(touched_set),
-                },
-            }
-        }
-        return removes + adds + [info]
-
-    # the merged state was computed against `snap`; a concurrent
-    # commit in between must raise, not be silently overwritten
-    return _commit_version(path, build, read_version=snap["version"])
+    scoped = _upsert_sync_file_scoped if delete_missing else _upsert_file_scoped
+    return scoped(spark, src, path, keys, snap, part_cols)
 
 
 def _file_num_records(path: str, rel: str, add: dict) -> int:
@@ -3527,16 +3434,11 @@ def delete_delta_log(
         for rel, add in snap["files"].items()
         if not _file_can_skip(add, phys_filters, phys_parts)
     }
-    by_base = {os.path.basename(rel): rel for rel in cand}
-    if len(by_base) != len(cand):
-        raise DeltaProtocolError(
-            "duplicate data-file basenames; cannot key DVs by file"
-        )
     now_ms = int(_time.time() * 1000)
     scanned = None
     cond = None
     matched_pos = None
-    counts: dict[str, int] = {}  # file basename → matched-row count
+    counts: dict[str, int] = {}  # file path → matched-row count
     if cand:
         scanned = _scan_adds(spark, path, meta, cand, keep_positions=True)
         cond = reduce(
@@ -3562,13 +3464,13 @@ def delete_delta_log(
         # and only ~12 B/row ever materializes. Unpersisted in the
         # finally below — never leaks past the op.
         matched_pos = (
-            scanned.filter(cond).select(_DV_BASE, _DV_RID).cache()
+            scanned.filter(cond).select(_DV_PATH, _DV_RID).cache()
         )
     try:
         if matched_pos is not None:
             counts = {
-                r[_DV_BASE]: r["_n"]
-                for r in matched_pos.groupBy(_DV_BASE)
+                r[_DV_PATH]: r["_n"]
+                for r in matched_pos.groupBy(_DV_PATH)
                 .agg(F.count(F.lit(1)).alias("_n"))
                 .collect()
             }
@@ -3579,8 +3481,7 @@ def delete_delta_log(
         rewrites = []
         dv_bound = []
         deleted_rows = 0
-        for base, n in sorted(counts.items()):
-            rel = by_base[base]
+        for rel, n in sorted(counts.items()):
             add = cand[rel]
             deleted_rows += n
             old = add.get("deletionVector")
@@ -3608,17 +3509,16 @@ def delete_delta_log(
         new_dvs = {}  # rel → merged indexes (file DV)
         inline_dvs = {}  # rel → inline descriptor
         if dv_bound:
-            bases = [os.path.basename(r) for r in dv_bound]
             matched = (
-                matched_pos.filter(F.col(_DV_BASE).isin(bases))
-                .groupBy(_DV_BASE)
+                matched_pos.filter(F.col(_DV_PATH).isin(dv_bound))
+                .groupBy(_DV_PATH)
                 .agg(
                     F.sort_array(F.collect_list(_DV_RID)).alias("idxs")
                 )
                 .collect()
             )
             for row in matched:
-                rel = by_base[row[_DV_BASE]]
+                rel = row[_DV_PATH]
                 add = cand[rel]
                 old = add.get("deletionVector")
                 old_idx = _dv.dv_row_indexes(path, old) if old else []
@@ -3820,19 +3720,9 @@ def optimize_delta_log(
             keep_positions=True,
             extra_phys_cols=[_idc, _cvc],
         )
-        _base = spark.createDataFrame(
-            [
-                (
-                    os.path.basename(rel),
-                    add.get("baseRowId"),
-                    add.get("defaultRowCommitVersion"),
-                )
-                for rel, add in selected.items()
-            ],
-            f"{_DV_BASE} string, __base_rid long, __dflt_rcv long",
-        )
+        _base = _row_base_map(spark, selected)
         df = (
-            df0.join(F.broadcast(_base), _DV_BASE)
+            df0.join(F.broadcast(_base), _DV_PATH)
             .withColumn(
                 _idc,
                 F.coalesce(
@@ -3842,7 +3732,7 @@ def optimize_delta_log(
             .withColumn(
                 _cvc, F.coalesce(F.col(_cvc), F.col("__dflt_rcv"))
             )
-            .drop("__base_rid", "__dflt_rcv", _DV_BASE, _DV_RID)
+            .drop("__base_rid", "__dflt_rcv", _DV_PATH, _DV_RID)
         )
     else:
         df = _scan_adds(spark, path, meta, selected)  # DVs materialize
@@ -3969,7 +3859,7 @@ def _rows_at_indexes(
         [(int(i),) for i in indexes], f"{_DV_RID} bigint"
     )
     return df.join(F.broadcast(idx), [_DV_RID], "inner").drop(
-        _DV_BASE, _DV_RID
+        _DV_PATH, _DV_RID
     )
 
 
@@ -4263,9 +4153,11 @@ def restore_delta_log(path: str, version: int) -> dict:
 
 def table_history(path: str) -> list[dict]:
     """DESCRIBE HISTORY for a log-backed table: one entry per commit
-    (newest first) with the operation name/parameters from commitInfo
-    (when present) and add/remove action counts — the audit view the
-    reference exposes through Delta's own ``DeltaTable.history()``."""
+    (newest first) with the operation name/parameters/metrics from
+    commitInfo (when present; only sync MERGE commits write metrics so
+    far, other entries carry None) and add/remove action counts — the
+    audit view the reference exposes through Delta's own
+    ``DeltaTable.history()``."""
     log = _log_dir(path)
     out = []
     for v in reversed(_list_versions(log)):
@@ -4288,6 +4180,7 @@ def table_history(path: str) -> list[dict]:
                 "version": v,
                 "operation": info.get("operation"),
                 "operationParameters": info.get("operationParameters"),
+                "operationMetrics": info.get("operationMetrics"),
                 "numAddedFiles": adds,
                 "numRemovedFiles": removes,
             }
@@ -5329,11 +5222,6 @@ def merge_delta_log(
     _refuse_if_append_only(meta, path, "MERGE")
     part_cols = meta.get("partitionColumns") or []
     files = snap["files"]
-    by_base = {os.path.basename(rel): rel for rel in files}
-    if len(by_base) != len(files):
-        raise DeltaProtocolError(
-            "duplicate data-file basenames; cannot file-scope MERGE"
-        )
     out_cols = [
         f.name
         for f in StructType.fromJson(
@@ -5363,7 +5251,7 @@ def merge_delta_log(
         keys,
         clauses,
         out_cols,
-        file_col=_DV_BASE,
+        file_col=_DV_PATH,
         emit_changes=cdf,
     )
     from medallion_delta_lake_spark.operators.caching import (
@@ -5371,24 +5259,21 @@ def merge_delta_log(
     )
 
     merged = tracked_cache(merged)
-    touched_bases = [
-        r["_file"]
+    touched = {
+        r["_file"]: files[r["_file"]]
         for r in merged.filter(
             F.col("_fired") & F.col("_file").isNotNull()
         )
         .select("_file")
         .distinct()
         .collect()
-    ]
-    touched = {
-        by_base[b]: files[by_base[b]] for b in touched_bases
     }
     # new content: surviving rows of touched files + inserts
     content = merged.filter(
         F.col("_keep")
         & (
             F.col("_file").isNull()
-            | F.col("_file").isin(touched_bases)
+            | F.col("_file").isin(list(touched))
         )
     ).select(*out_cols)
     _enforce_invariants(content, meta, path)
@@ -5398,8 +5283,7 @@ def merge_delta_log(
         for a in _stage_physical(
             content, path, meta, part_cols, now_ms
         )
-        if not a["add"].get("stats")
-        or json.loads(a["add"]["stats"]).get("numRecords", 1)
+        if _add_num_records(a["add"]) != 0
     ]
     cdc_actions: list[dict] = []
     if cdf:
@@ -5557,11 +5441,6 @@ def update_delta_log(
         for rel, add in snap["files"].items()
         if not _file_can_skip(add, phys_filters, phys_parts)
     }
-    by_base = {os.path.basename(rel): rel for rel in cand}
-    if len(by_base) != len(cand):
-        raise DeltaProtocolError(
-            "duplicate data-file basenames; cannot file-scope UPDATE"
-        )
     cond = (
         reduce(
             lambda a, b: a & b,
@@ -5585,11 +5464,11 @@ def update_delta_log(
         scanned = _scan_adds(spark, path, meta, cand, keep_positions=True)
         hits = (
             scanned.filter(cond)
-            .groupBy(_DV_BASE)
+            .groupBy(_DV_PATH)
             .agg(F.count(F.lit(1)).alias("_n"))
             .collect()
         )
-        touched = {by_base[r[_DV_BASE]]: cand[by_base[r[_DV_BASE]]] for r in hits}
+        touched = {r[_DV_PATH]: cand[r[_DV_PATH]] for r in hits}
         updated_rows = sum(r["_n"] for r in hits)
     now_ms = int(_time.time() * 1000)
     adds: list[dict] = []
