@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from medallion_delta_lake_spark.functions.hashing import h64, h64_sql
-from medallion_delta_lake_spark.plans.registry import query, table
+from medallion_delta_lake_spark.plans.registry import query, scratch, table
 
 # ------------------------------------------------- feature store
 
@@ -1068,10 +1068,6 @@ def scan_python_datasource_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     The streaming face of the same source (append tailing, checkpoint
     resume, skipChangeCommits) is pytest-only
     (tests/test_python_datasource.py)."""
-    import hashlib
-    import os
-    import tempfile
-
     from medallion_delta_lake_spark.sources import (
         delta_log as dl,
         python_datasource as pds,
@@ -1085,14 +1081,7 @@ def scan_python_datasource_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("event_id", "event_type", "value")
     )
-    # per-process dir: a concurrent harness (driver + local sweep)
-    # must not race on the same table path
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    p = os.path.join(
-        tempfile.gettempdir(),
-        f"mdls_pds_scan_{tag}_{os.getpid()}",
-        "events_sub",
-    )
+    p = scratch(sf_dir, "pds_events_sub")
     dl.write_delta(spark, sub.coalesce(4), p, mode="overwrite")
     back = spark.read.format(pds.FORMAT_NAME).option("path", p).load()
     return back.groupBy("event_type").agg(

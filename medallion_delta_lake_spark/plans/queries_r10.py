@@ -11,22 +11,13 @@ the committed table state equals the declarative equivalent.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from medallion_delta_lake_spark.plans.registry import query, table
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(
-        tempfile.gettempdir(), f"mdls_r10_{tag}_{os.getpid()}", name
-    )
+from medallion_delta_lake_spark.plans.registry import query, scratch, table
 
 
 @query(
@@ -69,8 +60,8 @@ def scan_delta_identity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medallion_delta_lake_spark.sources import identity as idm
     from medallion_delta_lake_spark.sources.delta_log import read_delta
 
-    p = _scratch(sf_dir, "identity_events")
-    shutil.rmtree(os.path.dirname(p), ignore_errors=True)
+    p = scratch(sf_dir, "identity_events")
+    shutil.rmtree(p, ignore_errors=True)
     ev = table(spark, sf_dir, "events").select("event_id", "event_type")
     idm.create_identity_table(
         spark, p, ev.schema, "row_id", start=1000, step=3
@@ -149,7 +140,7 @@ def stream_merge_clauses_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_merge_clauses,
     )
 
-    root = _scratch(sf_dir, "")
+    root = scratch(sf_dir, "stream_merge")
     shutil.rmtree(root, ignore_errors=True)
     target = os.path.join(root, "cust_state")
     feed_dir = os.path.join(root, "merge_feed")

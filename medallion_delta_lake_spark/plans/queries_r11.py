@@ -2,17 +2,11 @@
 drafted + oracle-proven in round 10 while the registry was frozen at
 291; see SURVEY.md §7 Phase 7). Each face pairs a Spark query over
 the r10 pre-built operators with its DuckDB oracle;
-tests/test_r11_drafts.py keeps running them through
-tests/oracle.compare_query at two SFs, so this module carries both
-the local proof and the registration.
-
-The module-local R11_QUERIES/R11_ORACLES maps are retained so the
-draft test can address exactly this cohort.
+tests/test_registered_faces.py runs every face registered here through
+tests/oracle.compare_query at two SFs.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,30 +20,13 @@ from medallion_delta_lake_spark.operators import sketches as sk
 from medallion_delta_lake_spark.operators import similarity as sim
 from medallion_delta_lake_spark.operators import text_analysis as ta
 from medallion_delta_lake_spark.operators import variant_ops as vo
-from medallion_delta_lake_spark.plans.registry import query, table
-
-R11_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-R11_ORACLES: dict[str, str] = {}
-
-
-def draft(name: str, oracle: str):
-    """r11 registration: every former draft face registers via the
-    standard ``@query`` decorator AND stays in the module-local maps
-    so tests/test_r11_drafts.py can pin the cohort's oracle-greenness
-    independently of the full registry sweep."""
-
-    def deco(fn):
-        R11_QUERIES[name] = fn
-        R11_ORACLES[name] = oracle
-        return query(name, oracle=oracle)(fn)
-
-    return deco
+from medallion_delta_lake_spark.plans.registry import query, scratch, table
 
 
 _UID = "CAST(user_id AS VARCHAR)"
 
 
-@draft(
+@query(
     "sketch-hll-users",
     oracle=f"""
     WITH h AS (
@@ -95,7 +72,7 @@ def sketch_hll_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sk.hll_estimate(parts, ["event_type"], p=10)
 
 
-@draft(
+@query(
     "sketch-kmv-distinct",
     oracle=f"""
     WITH h AS (
@@ -131,7 +108,7 @@ def sketch_kmv_distinct_q(
     return sk.kmv_estimate(parts, ["event_type"], k=256)
 
 
-@draft(
+@query(
     "sketch-kmv-overlap",
     oracle=f"""
     WITH h AS (
@@ -221,7 +198,7 @@ def _cms_probe_sql() -> str:
     return " UNION ALL ".join(rows)
 
 
-@draft(
+@query(
     "sketch-cms-probe",
     oracle=f"""
     WITH it AS (
@@ -255,7 +232,7 @@ def sketch_cms_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sk.cms_query(sketch, probes, "user_id", d=_CMS_D, w=_CMS_W)
 
 
-@draft(
+@query(
     "text-bm25-core",
     oracle=r"""
     WITH d AS (
@@ -296,7 +273,7 @@ def text_bm25_core_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ta.bm25_stats(table(spark, sf_dir, "documents"))
 
 
-@draft(
+@query(
     "variant-shred-orders",
     oracle="""
     SELECT o_orderstatus AS status,
@@ -358,7 +335,7 @@ def _jl_components_sql() -> str:
     return ", ".join(cols)
 
 
-@draft(
+@query(
     "sim-jl-components",
     oracle=f"""
     SELECT vec_id, {_jl_components_sql()}
@@ -388,7 +365,7 @@ def sim_jl_components_q(
     )
 
 
-@draft(
+@query(
     "ts-croston-rate",
     # recursive-CTE oracle spelling croston's literal recurrence
     # (α = ½ exact binary scaling — same determinism contract as the
@@ -459,17 +436,9 @@ def ts_croston_rate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_stream(spark, df, sf_dir, tag):
-    """Materialize a frame as a single-file parquet stream source
-    (per-process dir -- a concurrent harness must not race)."""
-    import hashlib
-    import os
-    import tempfile
-
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    p = os.path.join(
-        tempfile.gettempdir(), f"mdls_r11_{tag}_{h}_{os.getpid()}"
-    )
+def _stage_stream(spark, df, p):
+    """Materialize a frame as a single-file parquet stream source at
+    scratch path ``p``."""
     df.coalesce(1).write.mode("overwrite").parquet(p)
     return spark.readStream.schema(df.schema).parquet(p)
 
@@ -497,7 +466,7 @@ def _cms_group_probe_sql() -> str:
     return " UNION ALL ".join(rows)
 
 
-@draft(
+@query(
     "stream-cms-topk",
     # single-file source -> one availableNow microbatch -> the
     # emission is the final top-k; the oracle rebuilds the identical
@@ -543,7 +512,7 @@ def stream_cms_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = ev.select(
         "event_type", F.col("user_id").cast("string").alias("item")
     )
-    sdf = _stage_stream(spark, src, sf_dir, "cms_topk")
+    sdf = _stage_stream(spark, src, scratch(sf_dir, "cms_topk"))
     return se.run_available_now(
         stateful.cms_topk_monitor(sdf, d=4, w=256, k=5),
         "update",
@@ -552,7 +521,7 @@ def stream_cms_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "stream-kmv-distinct",
     # same face as sketch-kmv-distinct, reached through the streaming
     # monitor: bottom-k folding is the merge law, so the maintained
@@ -596,7 +565,7 @@ def stream_kmv_distinct_q(
     src = ev.select(
         "event_type", F.col("user_id").cast("string").alias("item")
     )
-    sdf = _stage_stream(spark, src, sf_dir, "kmv_distinct")
+    sdf = _stage_stream(spark, src, scratch(sf_dir, "kmv_distinct"))
     return se.run_available_now(
         stateful.kmv_distinct_monitor(sdf, k=256),
         "update",
@@ -605,7 +574,7 @@ def stream_kmv_distinct_q(
     )
 
 
-@draft(
+@query(
     "ml-target-encode-oof",
     oracle=f"""
     WITH b AS (
@@ -695,7 +664,7 @@ def _bloom_probe_sql() -> str:
     )
 
 
-@draft(
+@query(
     "sketch-bloom-semijoin",
     # the bloom-accelerated semi-join census: per event type, how
     # many event rows survive the purchase-users bloom (members all
@@ -769,7 +738,7 @@ def sketch_bloom_semijoin_q(
     )
 
 
-@draft(
+@query(
     "sketch-hdr-quantiles",
     oracle="""
     WITH v AS (
@@ -825,7 +794,7 @@ def sketch_hdr_quantiles_q(
     )
 
 
-@draft(
+@query(
     "stream-croston-monitor",
     # single-file availableNow run -> final smoothing state per user;
     # the same recursive-CTE recurrence as ts-croston-rate, filtered

@@ -22,15 +22,12 @@ product wraps int64), and ml-average-precision ranks via the bounded
 bucketed machinery instead of broadcasting a raw distinct-cents
 frame.
 
-The module-local R12_QUERIES/R12_ORACLES maps are retained so
-tests/test_r12_drafts.py can pin exactly this cohort's oracle-
-greenness and registration, and tests/test_oracle_dtype_lint.py
-lints these oracles' OUTPUT dtypes (no HUGEINT) with the rest.
+tests/test_registered_faces.py proves every face here oracle-green at two
+SFs, and tests/test_oracle_dtype_lint.py lints these oracles' OUTPUT
+dtypes (no HUGEINT) with the rest.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -38,31 +35,14 @@ from pyspark.sql import functions as F
 
 from medallion_delta_lake_spark.functions.hashing import h64, h64_sql
 from medallion_delta_lake_spark.operators.agg import q_div
-from medallion_delta_lake_spark.plans.registry import query, table
-
-R12_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-R12_ORACLES: dict[str, str] = {}
-
-
-def draft(name: str, oracle: str):
-    """r12 registration: every former draft face registers via the
-    standard ``@query`` decorator AND stays in the module-local maps
-    so tests/test_r12_drafts.py can pin the cohort independently of
-    the full registry sweep (the same wiring r11 used)."""
-
-    def deco(fn):
-        R12_QUERIES[name] = fn
-        R12_ORACLES[name] = oracle
-        return query(name, oracle=oracle)(fn)
-
-    return deco
+from medallion_delta_lake_spark.plans.registry import query, scratch, table
 
 
 # ------------------------------------------------------------------
 # ml eval: average precision (area under the PR curve, step version)
 
 
-@draft(
+@query(
     "ml-average-precision",
     # AP = (1/n_pos) Σ_{positive rows} P@rank, P@rank = cum_pos/rank.
     # Each P@rank term is quantized floor(1e12·cum_pos/rank) →
@@ -159,7 +139,7 @@ def ml_average_precision_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sampling: weighted Bernoulli via portable hash
 
 
-@draft(
+@query(
     "sample-weighted-bernoulli",
     # weight-proportional Bernoulli keep: row kept iff
     # h64(doc_id) · w_max < 2^60 · w  (pure integer inequality —
@@ -237,22 +217,12 @@ def sample_weighted_bernoulli_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # epoch-rebuild path and the r10 turnstile CMS path
 
 
-import hashlib as _hashlib
-import os as _os
 import shutil as _shutil
-import tempfile as _tempfile
 
 from medallion_delta_lake_spark.functions.hashing import (
     minhash_params,
     perm_hash_sql,
 )
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return _os.path.join(
-        _tempfile.gettempdir(), f"mdls_r12_{tag}_{_os.getpid()}", name
-    )
 
 
 _HLL_SQL_TAIL = """
@@ -284,7 +254,7 @@ _HLL_SQL_TAIL = """
 """
 
 
-@draft(
+@query(
     "sketch-hll-rebuild",
     # the refreshed epoch-partitioned HLL store must estimate exactly
     # like a from-scratch sketch of the FINAL table state; the oracle
@@ -323,7 +293,7 @@ def sketch_hll_rebuild_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medallion_delta_lake_spark.operators import sketches as sk
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "hll_epochs")
+    p = scratch(sf_dir, "hll_epochs")
     _shutil.rmtree(p, ignore_errors=True)
     base = (
         table(spark, sf_dir, "events")
@@ -382,7 +352,7 @@ def _cms_probe_sql() -> str:
     return " UNION ALL ".join(rows)
 
 
-@draft(
+@query(
     "sketch-cms-maintained",
     # turnstile CDC maintenance driven through the log engine: the
     # maintained counter matrix must answer point queries exactly
@@ -426,7 +396,7 @@ def sketch_cms_maintained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medallion_delta_lake_spark.operators import sketches as sk
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "cms_cdc")
+    p = scratch(sf_dir, "cms_cdc")
     _shutil.rmtree(p, ignore_errors=True)
     base = (
         table(spark, sf_dir, "events")
@@ -469,7 +439,7 @@ def sketch_cms_maintained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semi-structured: variant key census face
 
 
-@draft(
+@query(
     "variant-key-census",
     # the drift scorecard over a VARIANT column: per-key row count,
     # non-null count, and deterministic observed-type sample; the
@@ -533,7 +503,7 @@ def variant_key_census_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vo.variant_key_census(ev, "payload")
 
 
-@draft(
+@query(
     "variant-type-profile",
     # per-path observed-type distribution over a DELIBERATELY mixed
     # column (even event_ids carry amount as a number, odd as a
@@ -595,7 +565,7 @@ def variant_type_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "events-survival-table",
     # Kaplan-Meier risk table over user lifetimes: death day = a
     # user's last active day (censored when it equals the horizon),
@@ -683,7 +653,7 @@ def events_survival_table_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "ml-matthews-corr",
     # Matthews correlation from the same quarter-point confusion
     # cells as ml-confusion-threshold: integer cells, the MCC close
@@ -788,7 +758,7 @@ def ml_matthews_corr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cells.select("q", "tp", "fp", "fn", "tn", mcc.alias("mcc"))
 
 
-@draft(
+@query(
     "scan-orc-roundtrip",
     # ORC source coverage (Spark-native columnar format beyond
     # parquet/csv/json/delta): events subset written as ORC, read
@@ -815,7 +785,7 @@ def scan_orc_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     work on ORC scans the same way the parquet plan audits show —
     the face proves values survive the format's own encodings
     (union-encoded timestamps, present streams for nulls)."""
-    p = _scratch(sf_dir, "events_orc")
+    p = scratch(sf_dir, "events_orc")
     _shutil.rmtree(p, ignore_errors=True)
     src = table(spark, sf_dir, "events").filter(
         F.col("event_id") % 3 == 0
@@ -835,7 +805,7 @@ def scan_orc_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 
-@draft(
+@query(
     "scan-csv-typed",
     # §2-core scan-csv as a driver-graded face (previously e2e-pytest
     # evidence only): every-5th event written as headered CSV with an
@@ -865,7 +835,7 @@ def scan_csv_typed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECLARED schema, aggregate. Declared schemas are the contract —
     inferSchema on 100 TB means a second full scan AND type drift
     between runs."""
-    p = _scratch(sf_dir, "events_csv")
+    p = scratch(sf_dir, "events_csv")
     _shutil.rmtree(p, ignore_errors=True)
     src = table(spark, sf_dir, "events").filter(
         F.col("event_id") % 5 == 0
@@ -895,7 +865,7 @@ def scan_csv_typed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "scan-json-lines",
     # §2-core scan-json as a driver-graded face: ndjson written with
     # the micros timestampFormat, read back with a declared schema;
@@ -918,7 +888,7 @@ def scan_json_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     a DECLARED schema and explicit micros timestampFormat,
     aggregated. The oracle computes off the base parquet — text
     round-trip fidelity is the thing under test."""
-    p = _scratch(sf_dir, "events_json")
+    p = scratch(sf_dir, "events_json")
     _shutil.rmtree(p, ignore_errors=True)
     src = table(spark, sf_dir, "events").filter(
         F.col("event_id") % 7 == 0
@@ -942,7 +912,7 @@ def scan_json_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "events-cohort-ltv-curve",
     # cohort-retention's revenue counterpart: cumulative
     # value-per-cohort by weeks-since-acquisition, integer cents end
@@ -1046,7 +1016,7 @@ def events_cohort_ltv_curve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # log-replay read-back graduate from pytest-only to CORRECTNESS rows
 
 
-@draft(
+@query(
     "sink-delta-append-evolve",
     # two appends, the second widening the schema (merge_schema):
     # the committed table state must equal the declarative union with
@@ -1087,7 +1057,7 @@ def sink_delta_append_evolve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same division of labor as delta-spark itself."""
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "sink_append_evolve")
+    p = scratch(sf_dir, "sink_append_evolve")
     _shutil.rmtree(p, ignore_errors=True)
     ev = table(spark, sf_dir, "events")
     b1 = ev.filter(F.col("event_id") % 4 == 0).select(
@@ -1110,7 +1080,7 @@ def sink_delta_append_evolve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "sink-delta-overwrite-timetravel",
     # overwrite commits remove actions for every previously-active
     # file while keeping the data files — so the CURRENT snapshot is
@@ -1145,7 +1115,7 @@ def sink_delta_overwrite_timetravel_q(
     resolve_snapshot version replay). All-integer face."""
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "sink_overwrite_tt")
+    p = scratch(sf_dir, "sink_overwrite_tt")
     _shutil.rmtree(p, ignore_errors=True)
     ev = table(spark, sf_dir, "events")
     a = ev.filter(F.col("event_id") % 3 == 0).select(

@@ -36,19 +36,14 @@ The cohort answers VERDICT r11 #6 plus the remaining coverage seams:
 - maintenance-restore-version — churn then RESTORE to the seed
   version; the read-back must equal the original subset exactly.
 
-The module-local R13_QUERIES/R13_ORACLES maps are retained so
-tests/test_r13_drafts.py can pin exactly this cohort's oracle-
-greenness and registration, and tests/test_oracle_dtype_lint.py
-lints these oracles' OUTPUT dtypes (no HUGEINT) with the rest.
+tests/test_registered_faces.py proves every face here oracle-green at two
+SFs, and tests/test_oracle_dtype_lint.py lints these oracles' OUTPUT
+dtypes (no HUGEINT) with the rest.
 """
 
 from __future__ import annotations
 
-import hashlib as _hashlib
-import os as _os
 import shutil as _shutil
-import tempfile as _tempfile
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,41 +51,14 @@ from pyspark.sql import functions as F
 from medallion_delta_lake_spark.functions.hashing import h64_sql
 from medallion_delta_lake_spark.plans.queries_r12 import _HLL_SQL_TAIL
 from medallion_delta_lake_spark.plans.queries_text import _LSH_SCORED_CTE
-from medallion_delta_lake_spark.plans.registry import (
-    ORACLES as _REGISTRY_ORACLES,
-)
-from medallion_delta_lake_spark.plans.registry import query, table
-
-R13_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-R13_ORACLES: dict[str, str] = {}
-
-
-def draft(name: str, oracle: str):
-    """r13 registration: every former draft face registers via the
-    standard ``@query`` decorator AND stays in the module-local maps
-    so tests/test_r13_drafts.py can pin the cohort independently of
-    the full registry sweep (the same wiring r11 and r12 used)."""
-
-    def deco(fn):
-        R13_QUERIES[name] = fn
-        R13_ORACLES[name] = oracle
-        return query(name, oracle=oracle)(fn)
-
-    return deco
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return _os.path.join(
-        _tempfile.gettempdir(), f"mdls_r13_{tag}_{_os.getpid()}", name
-    )
+from medallion_delta_lake_spark.plans.registry import query, scratch, table
 
 
 # ------------------------------------------------------------------
 # epoch rebuild under CONCURRENT churn in one epoch (VERDICT r11 #6)
 
 
-@draft(
+@query(
     "sketch-hll-churn-epoch",
     # one refresh span throws a DELETE, an UPDATE, and an APPEND at
     # the SAME epoch (day 2) while days 0/1/3 stay untouched; the
@@ -138,7 +106,7 @@ def sketch_hll_churn_epoch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from medallion_delta_lake_spark.operators import sketches as sk
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "hll_churn")
+    p = scratch(sf_dir, "hll_churn")
     _shutil.rmtree(p, ignore_errors=True)
     base = (
         table(spark, sf_dir, "events")
@@ -184,7 +152,7 @@ def sketch_hll_churn_epoch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CDF-driven incremental refresh of a grouped rollup (VERDICT r11 #6)
 
 
-@draft(
+@query(
     "agg-cdf-incremental-refresh",
     # the maintained rollup must equal a from-scratch GROUP BY of the
     # churned final state: delete (k < 3000), update (+50 cents on
@@ -241,7 +209,7 @@ def agg_cdf_incremental_refresh_q(
     )
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "cdf_rollup")
+    p = scratch(sf_dir, "cdf_rollup")
     _shutil.rmtree(p, ignore_errors=True)
     base = (
         table(spark, sf_dir, "events")
@@ -286,7 +254,7 @@ def agg_cdf_incremental_refresh_q(
 # scan/sink coverage: pruned reads as CORRECTNESS rows
 
 
-@draft(
+@query(
     "scan-delta-skipping",
     # partitioned write_delta + filtered log-replay read: partition
     # pruning (pt = 2) plus min/max file skipping (event_id cut) must
@@ -313,7 +281,7 @@ def scan_delta_skipping_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan into a partition's worth of I/O)."""
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "delta_skip")
+    p = scratch(sf_dir, "delta_skip")
     _shutil.rmtree(p, ignore_errors=True)
     base = table(spark, sf_dir, "events").select(
         (F.col("event_id") % 4).alias("pt"),
@@ -337,7 +305,7 @@ def scan_delta_skipping_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "scan-parquet-partition-prune",
     # plain hive-layout round trip: write.partitionBy + a pruned
     # read-back (partition column type survives reattachment); the
@@ -362,7 +330,7 @@ def scan_parquet_partition_prune_q(
     this face adds the driver-graded VALUE contract (partition-column
     values survive the directory-name round trip and reattach with
     the right type)."""
-    p = _scratch(sf_dir, "pq_prune")
+    p = scratch(sf_dir, "pq_prune")
     _shutil.rmtree(p, ignore_errors=True)
     src = table(spark, sf_dir, "events").select(
         "event_id",
@@ -381,7 +349,7 @@ def scan_parquet_partition_prune_q(
 # stats: Wilcoxon signed-rank (paired), scale-safe midranks
 
 
-@draft(
+@query(
     "stats-wilcoxon-signed-rank",
     # paired pre/post per user (even- vs odd-event spend), midranks
     # of |d| DOUBLED so ties stay integral: d2 = 2·(RANK−1) + ties + 1
@@ -480,7 +448,7 @@ def stats_wilcoxon_signed_rank_q(
 # text: hapax-legomena vocabulary health
 
 
-@draft(
+@query(
     "text-hapax-ratio",
     # per-language: token mass, vocabulary size, hapax count (tokens
     # seen exactly once) and the q6-quantized hapax share of the
@@ -541,7 +509,45 @@ def text_hapax_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup QA: measured LSH recall against exact ground truth
 
 
-@draft(
+_LSH_RECALL_AUDIT_ORACLE = f"""
+    WITH {_LSH_SCORED_CTE},
+    lsh AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.5),
+    posts AS (SELECT doc_id, unnest(sh) AS h FROM sets),
+    tp AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM posts a JOIN posts b
+        ON a.h = b.h AND a.doc_id < b.doc_id
+    ),
+    tscored AS (
+      SELECT p.id_a, p.id_b,
+             CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+               / CAST(len(sa.sh) + len(sb.sh)
+                      - len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+               AS jaccard
+      FROM tp p
+      JOIN sets sa ON sa.doc_id = p.id_a
+      JOIN sets sb ON sb.doc_id = p.id_b
+    ),
+    true_p AS (SELECT * FROM tscored WHERE jaccard >= 0.5),
+    missed AS (
+      SELECT t.* FROM true_p t
+      LEFT JOIN lsh ON lsh.id_a = t.id_a AND lsh.id_b = t.id_b
+      WHERE lsh.id_a IS NULL
+    )
+    SELECT (SELECT COUNT(*) FROM true_p) AS n_true,
+           (SELECT COUNT(*) FROM lsh) AS n_lsh,
+           CAST(COUNT(*) AS BIGINT) AS n_missed,
+           CAST(CASE WHEN (SELECT COUNT(*) FROM true_p) > 0
+                THEN CAST((SELECT COUNT(*) FROM lsh) AS HUGEINT)
+                     * 1000000 // (SELECT COUNT(*) FROM true_p)
+                END AS BIGINT) AS recall_q6,
+           CAST(MAX(floor(jaccard * 1e6)) AS BIGINT)
+             AS worst_missed_j_q6
+    FROM missed
+"""
+
+
+@query(
     "dedup-lsh-recall-audit",
     # the audit every LSH deployment owes its users: exact n-gram
     # Jaccard ground truth (inverted-index self-join, uncapped on the
@@ -549,7 +555,7 @@ def text_hapax_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verified pairs; since candidates are exact-verified, hits = the
     # LSH pair count and missed = truth − hits. Counts + q6 recall +
     # the worst missed pair's similarity — all integers
-    oracle=None,  # set below: needs queries_text's CTE machinery
+    oracle=_LSH_RECALL_AUDIT_ORACLE,
 )
 def dedup_lsh_recall_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup / LSH recall audit — measure what the banded-MinHash
@@ -618,57 +624,12 @@ def dedup_lsh_recall_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-R13_ORACLES["dedup-lsh-recall-audit"] = f"""
-    WITH {_LSH_SCORED_CTE},
-    lsh AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.5),
-    posts AS (SELECT doc_id, unnest(sh) AS h FROM sets),
-    tp AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM posts a JOIN posts b
-        ON a.h = b.h AND a.doc_id < b.doc_id
-    ),
-    tscored AS (
-      SELECT p.id_a, p.id_b,
-             CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-               / CAST(len(sa.sh) + len(sb.sh)
-                      - len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-               AS jaccard
-      FROM tp p
-      JOIN sets sa ON sa.doc_id = p.id_a
-      JOIN sets sb ON sb.doc_id = p.id_b
-    ),
-    true_p AS (SELECT * FROM tscored WHERE jaccard >= 0.5),
-    missed AS (
-      SELECT t.* FROM true_p t
-      LEFT JOIN lsh ON lsh.id_a = t.id_a AND lsh.id_b = t.id_b
-      WHERE lsh.id_a IS NULL
-    )
-    SELECT (SELECT COUNT(*) FROM true_p) AS n_true,
-           (SELECT COUNT(*) FROM lsh) AS n_lsh,
-           CAST(COUNT(*) AS BIGINT) AS n_missed,
-           CAST(CASE WHEN (SELECT COUNT(*) FROM true_p) > 0
-                THEN CAST((SELECT COUNT(*) FROM lsh) AS HUGEINT)
-                     * 1000000 // (SELECT COUNT(*) FROM true_p)
-                END AS BIGINT) AS recall_q6,
-           CAST(MAX(floor(jaccard * 1e6)) AS BIGINT)
-             AS worst_missed_j_q6
-    FROM missed
-"""
-# the face registered with oracle=None above (its SQL needs the CTE
-# machinery defined later); now that the string exists, mirror it
-# into the registry so the driver gets the full hash-compare, not
-# the weaker rows-only check
-_REGISTRY_ORACLES["dedup-lsh-recall-audit"] = R13_ORACLES[
-    "dedup-lsh-recall-audit"
-]
-
-
 # ------------------------------------------------------------------
 # maintained JOIN from both sides' change feeds (r10 machinery,
 # pytest-only until now — driver-graded face)
 
 
-@draft(
+@query(
     "join-cdf-maintained",
     # a materialized orders⋈customer join maintained from BOTH sides'
     # change feeds (left: delete + update; right: update + delete)
@@ -722,8 +683,8 @@ def join_cdf_maintained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from medallion_delta_lake_spark.sources import delta_log
 
-    pl = _scratch(sf_dir, "ivm_join_l")
-    pr = _scratch(sf_dir, "ivm_join_r")
+    pl = scratch(sf_dir, "ivm_join_l")
+    pr = scratch(sf_dir, "ivm_join_r")
     _shutil.rmtree(pl, ignore_errors=True)
     _shutil.rmtree(pr, ignore_errors=True)
     left = (
@@ -780,7 +741,7 @@ def join_cdf_maintained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table-maintenance paths as driver faces: OPTIMIZE Z-ORDER, RESTORE
 
 
-@draft(
+@query(
     "maintenance-optimize-zorder",
     # DELETE a band by deletion vector, then OPTIMIZE ZORDER — the
     # rewrite must MATERIALIZE the DV (spec PURGE behavior), commit
@@ -813,7 +774,7 @@ def maintenance_optimize_zorder_q(spark: SparkSession, sf_dir: str) -> DataFrame
     mis-write that skips a live file all break the hash."""
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "opt_zorder")
+    p = scratch(sf_dir, "opt_zorder")
     _shutil.rmtree(p, ignore_errors=True)
     base = (
         table(spark, sf_dir, "events")
@@ -835,7 +796,7 @@ def maintenance_optimize_zorder_q(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@draft(
+@query(
     "maintenance-restore-version",
     # churn (delete + append) then RESTORE to the seed version: the
     # read-back must equal the ORIGINAL subset exactly — restore is a
@@ -861,7 +822,7 @@ def maintenance_restore_version_q(spark: SparkSession, sf_dir: str) -> DataFrame
     seed row lost, breaks the hash."""
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "restore_v0")
+    p = scratch(sf_dir, "restore_v0")
     _shutil.rmtree(p, ignore_errors=True)
     base = (
         table(spark, sf_dir, "events")

@@ -43,19 +43,14 @@ pytest-only maintenance paths:
   from the checkpoint alone (the log-retention path driven end to
   end, cleaned-commit count pinned).
 
-The module-local R14_QUERIES/R14_ORACLES maps are retained so
-tests/test_r14_drafts.py can pin exactly this cohort's oracle-
-greenness and registration, and tests/test_oracle_dtype_lint.py
-lints these oracles' OUTPUT dtypes (no HUGEINT) with the rest.
+tests/test_r14_drafts.py proves every face here oracle-green at two
+SFs, and tests/test_oracle_dtype_lint.py lints these oracles' OUTPUT
+dtypes (no HUGEINT) with the rest.
 """
 
 from __future__ import annotations
 
-import hashlib as _hashlib
-import os as _os
 import shutil as _shutil
-import tempfile as _tempfile
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -69,31 +64,7 @@ from medallion_delta_lake_spark.plans.queries_mleval import (
     _BASE_SQL,
     _label_events,
 )
-from medallion_delta_lake_spark.plans.registry import query, table
-
-R14_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-R14_ORACLES: dict[str, str] = {}
-
-
-def draft(name: str, oracle: str):
-    """r14-cohort registration (registered in ROUND 13 alongside the
-    r13 cohort per VERDICT r12 #1): registers via the standard
-    ``@query`` decorator AND stays in the module-local maps so
-    tests/test_r14_drafts.py can pin the cohort independently."""
-
-    def deco(fn):
-        R14_QUERIES[name] = fn
-        R14_ORACLES[name] = oracle
-        return query(name, oracle=oracle)(fn)
-
-    return deco
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return _os.path.join(
-        _tempfile.gettempdir(), f"mdls_r14_{tag}_{_os.getpid()}", name
-    )
+from medallion_delta_lake_spark.plans.registry import query, scratch, table
 
 
 _K = 8
@@ -108,7 +79,7 @@ def _qgap_sql(x: str, c: str) -> str:
     )
 
 
-@draft(
+@query(
     "cluster-kmeans-refine",
     # one exact Lloyd iteration: integer-quantized L2 argmin (ties to
     # the lowest cid), centroid update from floor(x*1e6) BIGINT
@@ -224,7 +195,7 @@ def cluster_kmeans_refine_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TAU = 0.3
 
 
-@draft(
+@query(
     "dedup-semantic-bucketed",
     # SemDeDup keep-first-seen: dup iff a lower-id same-LSH-bucket
     # vector has cosine >= tau; per-label census is all-integer
@@ -278,7 +249,7 @@ def dedup_semantic_bucketed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "events-retention-triangle",
     # cohort week = first active epoch-week per user; count distinct
     # active users per (cohort, offset) — the retention matrix
@@ -323,7 +294,7 @@ def events_retention_triangle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CQ_THRESH = 14
 
 
-@draft(
+@query(
     "stats-cochran-q",
     # k=5 correlated binary treatments (>=14 events of each type per
     # user); Q closes from integer row/column sums — the only double
@@ -400,7 +371,7 @@ def stats_cochran_q_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ER_W = 8
 
 
-@draft(
+@query(
     "window-kaufman-er",
     # trailing |net change| over path length on integer cents — the
     # trend-efficiency signal; exact integer num/den, one division
@@ -486,7 +457,7 @@ def window_kaufman_er_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "agg-trimmed-mean",
     # 10% two-sided trim per event type: rank by (cents, event_id),
     # drop n//10 from each tail, decimal-exact mean of the kept cents
@@ -555,7 +526,7 @@ def agg_trimmed_mean_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "ml-fbeta-sweep",
     # decile thresholds of the integer score range; F-beta family from
     # integer cells via denominator-cleared rational betas
@@ -609,7 +580,7 @@ def ml_fbeta_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "stats-cohens-d",
     # effect size between purchase and view values: means and pooled
     # variance close from exact integer cents / cents^2 sums
@@ -710,7 +681,7 @@ def stats_cohens_d_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@draft(
+@query(
     "maintenance-vacuum-retention",
     # overwrite tombstones the 2 seed files; VACUUM(keep_versions=1)
     # must delete exactly those 2 and leave the live snapshot intact
@@ -739,7 +710,7 @@ def maintenance_vacuum_retention_q(
     (optimize-zorder / restore-version / vacuum)."""
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "vacuum_ret")
+    p = scratch(sf_dir, "vacuum_ret")
     _shutil.rmtree(p, ignore_errors=True)
     seed = (
         table(spark, sf_dir, "events")
@@ -762,7 +733,7 @@ def maintenance_vacuum_retention_q(
     ).withColumn("n_files_vacuumed", F.lit(n_data).cast("int"))
 
 
-@draft(
+@query(
     "maintenance-checkpoint-v2",
     # V2 checkpoint at version 3 (protocol-upgrade commit included),
     # then cleanup_log deletes commits 0..2 — replay must rebuild the
@@ -795,7 +766,7 @@ def maintenance_checkpoint_v2_q(
     tests/test_log_compaction.py) to a CORRECTNESS row."""
     from medallion_delta_lake_spark.sources import delta_log
 
-    p = _scratch(sf_dir, "ckpt_v2")
+    p = scratch(sf_dir, "ckpt_v2")
     _shutil.rmtree(p, ignore_errors=True)
     ev = table(spark, sf_dir, "events")
 

@@ -52,16 +52,12 @@ The cohort adds capabilities no existing family covers:
   full windows only): the standardized lexical-diversity score that
   raw TTR's length sensitivity breaks; complements r13's hapax ratio.
 
-Every face registers via the standard ``@query`` decorator AND stays
-in the module-local maps so tests/test_r15_drafts.py can pin the
-cohort independently of the full registry sweep (the same wiring the
-r11–r14 cohorts used); tests/test_oracle_dtype_lint.py lints these
-oracles' OUTPUT dtypes (no HUGEINT).
+Every face registers through ``@query``; tests/test_r15_drafts.py
+proves each oracle-green at two SFs and tests/test_oracle_dtype_lint.py
+lints these oracles' OUTPUT dtypes (no HUGEINT).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -69,23 +65,6 @@ from pyspark.sql import functions as F
 from medallion_delta_lake_spark.functions.hashing import h64, h64_sql
 from medallion_delta_lake_spark.operators.agg import q_div
 from medallion_delta_lake_spark.plans.registry import query, table
-
-R15_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-R15_ORACLES: dict[str, str] = {}
-
-
-def draft(name: str, oracle: str):
-    """r15 registration: every former draft face registers via the
-    standard ``@query`` decorator AND stays in the module-local maps
-    so tests/test_r15_drafts.py can pin the cohort independently of
-    the full registry sweep (the same wiring r11–r14 used)."""
-
-    def deco(fn):
-        R15_QUERIES[name] = fn
-        R15_ORACLES[name] = oracle
-        return query(name, oracle=oracle)(fn)
-
-    return deco
 
 
 _UID = "CAST(user_id AS VARCHAR)"
@@ -96,7 +75,7 @@ _UID = "CAST(user_id AS VARCHAR)"
 _ID_SPACE = 1 << 20  # 32 bitmap buckets of 32,768 bits each
 
 
-@draft(
+@query(
     "agg-bitmap-exact-distinct",
     oracle=f"""
     WITH m AS (
@@ -189,7 +168,7 @@ def _lprop_oracle(iters: int = 3) -> str:
     return "".join(parts)
 
 
-@draft("graph-label-propagation", oracle=_lprop_oracle())
+@query("graph-label-propagation", oracle=_lprop_oracle())
 def graph_label_propagation_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -240,7 +219,7 @@ def _lb_q_sql(n: str) -> str:
     )
 
 
-@draft(
+@query(
     "stats-ljung-box",
     oracle=f"""
     WITH d AS (
@@ -379,7 +358,7 @@ def stats_ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts-classical-decompose
 
 
-@draft(
+@query(
     "ts-classical-decompose",
     oracle="""
     WITH s AS (
@@ -482,7 +461,7 @@ _W1_BINS = 256
 _W1_WIDTH = 2.0  # covers value ∈ [0, 512); clamp into the last bin
 
 
-@draft(
+@query(
     "drift-wasserstein-binned",
     oracle=f"""
     WITH b AS (
@@ -593,7 +572,7 @@ def drift_wasserstein_binned_q(
 # window-vwap-anchored
 
 
-@draft(
+@query(
     "window-vwap-anchored",
     oracle="""
     WITH li AS (
@@ -678,7 +657,7 @@ def window_vwap_anchored_q(
 _SYS_K = 7
 
 
-@draft(
+@query(
     "sample-systematic-everyk",
     oracle=f"""
     WITH h AS (
@@ -722,7 +701,7 @@ def sample_systematic_everyk_q(
 # sketch-theta-diff
 
 
-@draft(
+@query(
     "sketch-theta-diff",
     oracle=f"""
     WITH h AS (
@@ -794,7 +773,7 @@ def sketch_theta_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BURST_MIN_GAPS = 10
 
 
-@draft(
+@query(
     "events-burstiness",
     oracle=f"""
     WITH e AS (
@@ -895,7 +874,7 @@ _TTR_WIN = 40
 _TTR_NORM_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 
 
-@draft(
+@query(
     "text-ttr-windowed",
     oracle=f"""
     WITH d AS (

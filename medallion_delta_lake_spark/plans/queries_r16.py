@@ -50,50 +50,21 @@ The cohort closes physical-layout and data-quality gaps:
   counts; rounds are cached frames so the lineage stays linear
   (label-propagation's 2^k lesson, operators/graph.py).
 
-Every face registers via the standard ``@query`` decorator AND stays
-in the module-local maps so tests/test_r16_drafts.py can pin the
-cohort independently of the full registry sweep (the same wiring the
-r11–r15 cohorts used); tests/test_oracle_dtype_lint.py lints these
-oracles' output dtypes.
+Every face registers through ``@query``; tests/test_registered_faces.py
+proves each oracle-green at two SFs and tests/test_oracle_dtype_lint.py
+lints these oracles' output dtypes.
 """
 
 from __future__ import annotations
 
 import hashlib as _hashlib
-import os as _os
 import shutil as _shutil
-import tempfile as _tempfile
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from medallion_delta_lake_spark.operators.agg import q_div
-from medallion_delta_lake_spark.plans.registry import query, table
-
-R16_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-R16_ORACLES: dict[str, str] = {}
-
-
-def draft(name: str, oracle: str):
-    """r16 registration: every former draft face registers via the
-    standard ``@query`` decorator AND stays in the module-local maps
-    so tests/test_r16_drafts.py can pin the cohort independently of
-    the full registry sweep (the same wiring r11–r15 used)."""
-
-    def deco(fn):
-        R16_QUERIES[name] = fn
-        R16_ORACLES[name] = oracle
-        return query(name, oracle=oracle)(fn)
-
-    return deco
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return _os.path.join(
-        _tempfile.gettempdir(), f"mdls_r16_{tag}_{_os.getpid()}", name
-    )
+from medallion_delta_lake_spark.plans.registry import query, scratch, table
 
 
 # ------------------------------------------------------------------
@@ -102,7 +73,7 @@ def _scratch(sf_dir: str, name: str) -> str:
 _BKT = 16
 
 
-@draft(
+@query(
     "join-bucketed-colocated",
     # the bucketing is pure physical layout — the logical answer is
     # the plain join/aggregate over the source tables
@@ -128,7 +99,7 @@ def join_bucketed_colocated_q(
     per bucket: pay the layout cost once at write time, every
     downstream join rides it free. The only shuffle left in the face
     is the final small groupBy."""
-    loc = _scratch(sf_dir, "bucketed_db")
+    loc = scratch(sf_dir, "bucketed_db")
     db = f"mdls_r16_bkt_{_hashlib.md5(loc.encode()).hexdigest()[:8]}"
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
     _shutil.rmtree(loc, ignore_errors=True)
@@ -176,7 +147,7 @@ def bucketed_join_frame(
     mark the scans ``Bucketed: false``, which is the right plan at
     that size but not the shape under test — at fact⋈fact scale the
     broadcast option is gone and SMJ-over-buckets is what remains."""
-    loc = _scratch(sf_dir, "bucketed_db")
+    loc = scratch(sf_dir, "bucketed_db")
     db = f"mdls_r16_bkt_{_hashlib.md5(loc.encode()).hexdigest()[:8]}"
     ob = spark.table(f"{db}.orders_b").hint("merge")
     lb = spark.table(f"{db}.lineitem_b")
@@ -191,7 +162,7 @@ _DQ_PRIORITIES = (
 )
 
 
-@draft(
+@query(
     "dq-expectation-suite",
     oracle=f"""
     WITH r1 AS (
@@ -355,7 +326,7 @@ def dq_expectation_suite_q(
 _APDEX_T_CENTS = 10000  # T = 100.00 (value treated as latency)
 
 
-@draft(
+@query(
     "agg-apdex-score",
     oracle=f"""
     WITH v AS (
@@ -426,7 +397,7 @@ def agg_apdex_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # events-markov-2step
 
 
-@draft(
+@query(
     "events-markov-2step",
     oracle="""
     WITH s AS (
@@ -499,7 +470,7 @@ def events_markov_2step_q(
 _TSF_TRAIN_LAST = 23  # train = days 1..23, test = the rest (7 days)
 
 
-@draft(
+@query(
     "ts-drift-naive-forecast",
     oracle=f"""
     WITH s AS (
@@ -624,7 +595,7 @@ def ts_drift_naive_forecast_q(
 # events-retention-bitmap
 
 
-@draft(
+@query(
     "events-retention-bitmap",
     oracle="""
     WITH du AS (
@@ -722,7 +693,7 @@ def events_retention_bitmap_q(
 _CSV_BAD_MOD = 97
 
 
-@draft(
+@query(
     "scan-csv-malformed-audit",
     oracle=f"""
     WITH src AS (
@@ -761,7 +732,7 @@ def scan_csv_malformed_audit_q(
     clean row's double survives the text round-trip bit-exactly (the
     oracle computes the same totals from the original parquet). Scan
     + one aggregate — no shuffle beyond the groupBy."""
-    p = _scratch(sf_dir, "csv_land")
+    p = scratch(sf_dir, "csv_land")
     _shutil.rmtree(p, ignore_errors=True)
     ev = table(spark, sf_dir, "events")
     line = F.concat_ws(
@@ -861,7 +832,7 @@ def _kcore_oracle(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
     return "".join(parts)
 
 
-@draft("graph-kcore-peel", oracle=_kcore_oracle())
+@query("graph-kcore-peel", oracle=_kcore_oracle())
 def graph_kcore_peel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """graph / k-core peeling (k=3, 3 rounds) over the part↔supplier
     graph: each round drops every node whose CURRENT degree is below
@@ -943,7 +914,7 @@ _DL_PD = "CAST(p AS DOUBLE)"
 _DL_QD = "CAST(q AS DOUBLE)"
 
 
-@draft(
+@query(
     "ml-auc-delong-ci",
     # HUGEINT accumulators on the DuckDB side (SUM(BIGINT) is native
     # HUGEINT), DECIMAL(38,0) on the Spark side — both exact; the two
@@ -1024,7 +995,7 @@ def ml_auc_delong_ci_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SKEW_N = 20
 
 
-@draft(
+@query(
     "window-rolling-skewness",
     oracle=f"""
     WITH e AS (

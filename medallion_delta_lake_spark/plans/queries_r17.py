@@ -1,10 +1,7 @@
 """Round-17 cohort query faces — REGISTERED in round 15 (drafted and
-two-SF oracle-proven in round 12 while the r13..r16 windows drained,
-per the corrected backlog schedule in __spark_entry__). Each face
-pairs a Spark query with its DuckDB oracle; tests/test_r17_drafts.py
-pins the cohort registered with byte-identical oracle strings and
-proves every pair compare_query-green at two SFs (SURVEY.md §7
-Phases 8/9).
+two-SF oracle-proven in round 12). Each face pairs a Spark query
+with its DuckDB oracle; tests/test_r17_drafts.py proves every
+pair compare_query-green at two SFs (SURVEY.md §7 Phases 8/9).
 
 The cohort closes the LAST delta_log entry points without driver
 faces (CONVERT / CLONE / DESCRIBE-HISTORY) and widens ML-eval,
@@ -57,48 +54,20 @@ tests/test_oracle_dtype_lint.py lints these oracles' output dtypes.
 
 from __future__ import annotations
 
-import hashlib as _hashlib
-import os as _os
 import shutil as _shutil
-import tempfile as _tempfile
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from medallion_delta_lake_spark.operators.agg import q_div
-from medallion_delta_lake_spark.plans.registry import query, table
-
-R17_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-R17_ORACLES: dict[str, str] = {}
-
-
-def draft(name: str, oracle: str):
-    """r15 registration: every former draft face registers via the
-    standard ``@query`` decorator AND stays in the module-local maps
-    so tests/test_r17_drafts.py can pin the cohort independently of
-    the full registry sweep (the same wiring r11–r16 used)."""
-
-    def deco(fn):
-        R17_QUERIES[name] = fn
-        R17_ORACLES[name] = oracle
-        return query(name, oracle=oracle)(fn)
-
-    return deco
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return _os.path.join(
-        _tempfile.gettempdir(), f"mdls_r17_{tag}_{_os.getpid()}", name
-    )
+from medallion_delta_lake_spark.plans.registry import query, scratch, table
 
 
 # ------------------------------------------------------------------
 # maintenance-convert-parquet
 
 
-@draft(
+@query(
     "maintenance-convert-parquet",
     # CONVERT moves no data: the log-replay read must reproduce the
     # same aggregate the raw parquet subset gives
@@ -127,7 +96,7 @@ def maintenance_convert_parquet_q(
     a full rewrite."""
     from medallion_delta_lake_spark.sources import delta_log as dl
 
-    p = _scratch(sf_dir, "convert_src")
+    p = scratch(sf_dir, "convert_src")
     _shutil.rmtree(p, ignore_errors=True)
     sub = (
         table(spark, sf_dir, "events")
@@ -150,7 +119,7 @@ def maintenance_convert_parquet_q(
 # maintenance-clone-table
 
 
-@draft(
+@query(
     "maintenance-clone-table",
     # src must stay complete after the clone-side DELETE; the clone
     # must reflect it — both recomputable from events directly
@@ -190,8 +159,8 @@ def maintenance_clone_table_q(
     oracle recomputes both sides from the raw events."""
     from medallion_delta_lake_spark.sources import delta_log as dl
 
-    src = _scratch(sf_dir, "clone_src")
-    dst = _scratch(sf_dir, "clone_dst")
+    src = scratch(sf_dir, "clone_src")
+    dst = scratch(sf_dir, "clone_dst")
     _shutil.rmtree(src, ignore_errors=True)
     _shutil.rmtree(dst, ignore_errors=True)
     sub = (
@@ -229,7 +198,7 @@ def maintenance_clone_table_q(
 _LM_NORM_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 
 
-@draft(
+@query(
     "text-bigram-lm-score",
     oracle=f"""
     WITH d AS (
@@ -321,7 +290,7 @@ _YOUDEN_BASE = """
 """
 
 
-@draft(
+@query(
     "ml-threshold-youden",
     # decile-cut thresholds (same arithmetic cut as ml-lift-deciles /
     # ml-fbeta-sweep); J·P·N is a signed integer per threshold
@@ -472,7 +441,7 @@ def ml_threshold_youden_q(
 # maintenance-history-audit
 
 
-@draft(
+@query(
     "maintenance-history-audit",
     # the 5-commit life is fully pinned: repartition(2) seeds exactly
     # 2 files at any SF, the append is 1, the DELETE DVs all 3 files
@@ -503,7 +472,7 @@ def maintenance_history_audit_q(
     repartition/coalesce, not data volume)."""
     from medallion_delta_lake_spark.sources import delta_log as dl
 
-    p = _scratch(sf_dir, "hist_life")
+    p = scratch(sf_dir, "hist_life")
     _shutil.rmtree(p, ignore_errors=True)
     sub = (
         table(spark, sf_dir, "events")
@@ -547,7 +516,7 @@ def maintenance_history_audit_q(
 _MCC_TYPES = "('click', 'error', 'purchase', 'signup', 'view')"
 
 
-@draft(
+@query(
     "stats-mcc-multiclass",
     oracle=f"""
     WITH base AS (
@@ -657,7 +626,7 @@ def stats_mcc_multiclass_q(
 # ml-regression-metrics
 
 
-@draft(
+@query(
     "ml-regression-metrics",
     oracle="""
     WITH x AS (
@@ -789,7 +758,7 @@ _KEY_MIN_A = 5
 _KEY_TOPK = 5
 
 
-@draft(
+@query(
     "text-chi2-keyness",
     oracle=f"""
     WITH d AS (
@@ -972,7 +941,7 @@ def _bfs_oracle(rounds: int = 3) -> str:
     return "".join(parts)
 
 
-@draft("graph-bfs-distance", oracle=_bfs_oracle())
+@query("graph-bfs-distance", oracle=_bfs_oracle())
 def graph_bfs_distance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """graph / 3-hop BFS distance histogram from the nation-0
     supplier seed set over the part↔supplier graph — 'how much of the
@@ -1065,7 +1034,7 @@ def graph_bfs_distance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window-rolling-mad
 
 
-@draft(
+@query(
     "window-rolling-mad",
     # exact 21-point rolling MAD: center and deviations are element
     # selections from sorted lists — zero float arithmetic beyond the

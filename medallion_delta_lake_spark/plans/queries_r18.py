@@ -1,9 +1,8 @@
 """Round-18 cohort query faces — REGISTERED in round 15 alongside the
-r17 cohort (drafted and two-SF oracle-proven in round 12, per the
-corrected backlog schedule in __spark_entry__). Same proof protocol
-as every cohort since r10: tests/test_r18_drafts.py pins the cohort
-registered with byte-identical oracle strings and proves each face
-compare_query-green at two SFs.
+r17 cohort (drafted and two-SF oracle-proven in round 12). Same
+proof protocol as every cohort since r10:
+tests/test_registered_faces.py proves each face compare_query-green
+at two SFs.
 
 - stream-cdf-tail — the STREAMING change-data-feed source built this
   round (sources/python_datasource.py:_CdfStreamReader,
@@ -45,45 +44,17 @@ compare_query-green at two SFs.
 
 from __future__ import annotations
 
-import hashlib as _hashlib
-import os as _os
 import shutil as _shutil
-import tempfile as _tempfile
 import uuid as _uuid
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from medallion_delta_lake_spark.operators.agg import q_div
-from medallion_delta_lake_spark.plans.registry import query, table
-
-R18_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-R18_ORACLES: dict[str, str] = {}
+from medallion_delta_lake_spark.plans.registry import query, scratch, table
 
 
-def draft(name: str, oracle: str):
-    """r15 registration: every former draft face registers via the
-    standard ``@query`` decorator AND stays in the module-local maps
-    so tests/test_r18_drafts.py can pin the cohort independently of
-    the full registry sweep (the same wiring r11–r16 used)."""
-
-    def deco(fn):
-        R18_QUERIES[name] = fn
-        R18_ORACLES[name] = oracle
-        return query(name, oracle=oracle)(fn)
-
-    return deco
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return _os.path.join(
-        _tempfile.gettempdir(), f"mdls_r18_{tag}_{_os.getpid()}", name
-    )
-
-
-@draft(
+@query(
     "stream-cdf-tail",
     # the staged life: v0 overwrite (%4==1), v1 props (silent),
     # v2 append (%4==2), v3 DELETE cents<=5000 (DV), v4 UPDATE
@@ -154,7 +125,7 @@ def stream_cdf_tail_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pds.register(spark)
-    p = _scratch(sf_dir, "cdf_tail")
+    p = scratch(sf_dir, "cdf_tail")
     _shutil.rmtree(p, ignore_errors=True)
     sub = (
         table(spark, sf_dir, "events")
@@ -266,7 +237,7 @@ def fold_changes(
     )
 
 
-@draft(
+@query(
     "stream-cdf-replica",
     # the replica's final state must equal the source's: m in (1,2),
     # minus the DV-deleted cents<=5000 rows, updated rows at 0
@@ -307,9 +278,9 @@ def stream_cdf_replica_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pds.register(spark)
-    src = _scratch(sf_dir, "cdf_rep_src")
-    rep = _scratch(sf_dir, "cdf_rep_dst")
-    ckpt = _scratch(sf_dir, "cdf_rep_ckpt")
+    src = scratch(sf_dir, "cdf_rep_src")
+    rep = scratch(sf_dir, "cdf_rep_dst")
+    ckpt = scratch(sf_dir, "cdf_rep_ckpt")
     for d in (src, rep, ckpt):
         _shutil.rmtree(d, ignore_errors=True)
     sub = (
@@ -389,7 +360,7 @@ def stream_cdf_replica_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scan-parquet-schema-merge
 
 
-@draft(
+@query(
     "scan-parquet-schema-merge",
     # batch 1 lacks user_id; batch 2 carries it — the merged scan
     # must null-fill batch 1 and keep batch 2's values intact
@@ -422,7 +393,7 @@ def scan_parquet_schema_merge_q(
     nothing else shifts (counts and cents sums stay exact). This is
     the footer-merge twin of sink-delta-append-evolve's log-carried
     evolution. Plan: one merged scan + one grouped aggregate."""
-    p = _scratch(sf_dir, "pq_merge")
+    p = scratch(sf_dir, "pq_merge")
     _shutil.rmtree(p, ignore_errors=True)
     sub = (
         table(spark, sf_dir, "events")
@@ -463,7 +434,7 @@ _BD_BASE = """
 """
 
 
-@draft(
+@query(
     "ml-brier-decomposition",
     # Murphy decomposition over 10 fixed forecast bins; REL/RES fold
     # per-bin quantized integers (two-step trunc, identical in both
@@ -617,7 +588,7 @@ def ml_brier_decomposition_q(
 # udtf-split-sentences
 
 
-@draft(
+@query(
     "udtf-split-sentences",
     oracle="""
     WITH d AS (
@@ -685,7 +656,7 @@ _SEG_SQL = (
 )
 
 
-@draft(
+@query(
     "events-segment-migration",
     oracle=f"""
     WITH sub AS (
@@ -778,7 +749,7 @@ def events_segment_migration_q(
 # stats-cochran-armitage
 
 
-@draft(
+@query(
     "stats-cochran-armitage",
     oracle="""
     WITH base AS (
@@ -888,7 +859,7 @@ _COV_N = 5
 _COV_NORM_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 
 
-@draft(
+@query(
     "text-crossdoc-ngram-coverage",
     oracle=f"""
     WITH d AS (
@@ -984,7 +955,7 @@ def text_crossdoc_ngram_coverage_q(
 _KFOLD = 5
 
 
-@draft(
+@query(
     "split-group-kfold",
     oracle=f"""
     WITH f AS (
@@ -1048,7 +1019,7 @@ def split_group_kfold_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stats-ratio-delta-method
 
 
-@draft(
+@query(
     "stats-ratio-delta-method",
     oracle="""
     WITH u AS (

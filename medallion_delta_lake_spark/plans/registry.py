@@ -29,9 +29,11 @@ value-hash comparison against DuckDB is exact, not approximate):
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import stat
+import tempfile
 import threading
 from collections.abc import Callable
 
@@ -56,6 +58,18 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         return fn
 
     return deco
+
+
+def scratch(sf_dir: str, name: str) -> str:
+    """Scratch path for the tables a face stages: one parent per
+    (SF, process), so two processes over one SF (a harness run beside
+    a local sweep) never race on a table path, and one subdirectory
+    ``name`` per face. A face clears only its own subdirectory: the
+    frames its siblings returned still read lazily from theirs."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    return os.path.join(
+        tempfile.gettempdir(), f"mdls_{tag}_{os.getpid()}", name
+    )
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

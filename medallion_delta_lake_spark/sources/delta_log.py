@@ -3656,14 +3656,15 @@ def delete_delta_log(
 
     # Rebase on a lost race when the interloper's files are provably
     # disjoint: our write set untouched, their adds skippable under
-    # OUR predicate (the same stats test that pruned the scan).
+    # OUR predicate (the same physical-name stats test that pruned the
+    # scan).
     version = _commit_with_rebase(
         path,
         build,
         read_version=snap["version"],
         our_removed=set(removes) | set(rewrites) | set(descriptors),
         add_conflicts=lambda add: not _file_can_skip(
-            add, filters, part_cols
+            add, phys_filters, phys_parts
         ),
     )
     return {
@@ -5470,7 +5471,7 @@ def update_delta_log(
         read_version=snap["version"],
         our_removed=set(touched),
         add_conflicts=lambda add: not _file_can_skip(
-            add, filters, part_cols
+            add, phys_filters, phys_parts
         ),
     )
     return {

@@ -14,6 +14,7 @@ actionable even when it doesn't reproduce later (driver-red evidence).
 from __future__ import annotations
 
 import datetime as _dt
+import importlib
 import json
 import math
 from collections import Counter
@@ -79,6 +80,18 @@ def _persist_mismatch(name: str, sf_dir: str, payload: dict) -> Path:
     payload = {"op": name, "sf_dir": sf_dir, **payload}
     path.write_text(json.dumps(payload, indent=1, default=repr))
     return path
+
+
+def registered_faces(module: str) -> list[str]:
+    """Sorted ids of the registered faces defined in ``plans/<module>.py``."""
+    importlib.import_module(f"medallion_delta_lake_spark.plans.{module}")
+    from medallion_delta_lake_spark.plans import registry
+
+    return sorted(
+        n
+        for n, fn in registry.QUERIES.items()
+        if fn.__module__.rsplit(".", 1)[-1] == module
+    )
 
 
 def compare_query(spark, name: str, queries: dict, oracles: dict, sf_dir: str):

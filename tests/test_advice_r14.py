@@ -6,10 +6,6 @@
    ``_commit_timestamp`` from the covering checkpoint or compaction
    artifact instead of crashing ``FileNotFoundError`` on the first
    batch (``delta_log._commit_timestamp`` fallback chain).
-2. (low) the drain-schedule comment arithmetic in
-   ``__spark_entry__`` was corrected (r16 registers r19+r20 = 20
-   faces + 30 r8-stale → terminal registry 399); the cohorts it
-   schedules for THIS round must actually occupy the driver window.
 3. (low) ``test_bench_sees_full_registry`` now asserts on bench.py's
    MECHANISM (subprocess registry count + AST import-ladder lint) —
    that fix lives in tests/test_schema_lint.py.
@@ -190,35 +186,3 @@ def test_stream_cdc_no_logical_misbind_after_rename_readd(
     assert len(rows) == 2
     assert {r["amount"] for r in rows} == {10, 15}
     assert all(r["v"] is None for r in rows)
-
-
-def test_window_carries_scheduled_cohorts():
-    """Pin ADVICE r13 (low): the corrected drain schedule, at its
-    CURRENT row (r15): the r17+r18 cohorts (20) + the full 26-id
-    r7-stale remnant + the first 4 r8-stale ids inside the 50-slot
-    driver window, registry at 379."""
-    import __spark_entry__ as entry
-    from medallion_delta_lake_spark.plans import (
-        queries_r17 as r17,
-        queries_r18 as r18,
-    )
-
-    window = entry._DRIVER_PRIORITY
-    assert len(window) == 50 == len(set(window))
-    assert set(r17.R17_QUERIES) <= set(window)
-    assert set(r18.R18_QUERIES) <= set(window)
-    r7_remnant_edges = {
-        "q22-global-sales-opportunity",
-        "sim-ann-lsh",
-        "stream-cusum-monitor",
-        "window-winsorize",
-    }
-    assert r7_remnant_edges <= set(window)
-    r8_head = {
-        "agg-corr-matrix",
-        "agg-latency-histogram",
-        "agg-markov-transition",
-        "agg-vector-mean",
-    }
-    assert r8_head <= set(window)
-    assert len(entry.queries()) == 379 == len(entry.oracle_sql())

@@ -1,5 +1,4 @@
-"""ADVICE r14 fixes, pinned (one test per item, the discipline that
-cleared the r13/r14 lists):
+"""ADVICE r14 fix, pinned:
 
 1. (low) ``delta_log._commit_timestamp``'s cleaned-commit fallback
    (checkpoint/compaction artifact mtime) is clamped to the next
@@ -8,11 +7,6 @@ cleared the r13/r14 lists):
    a time LATER than version+k's commitInfo.timestamp, so CDF rows
    can't carry decreasing ``_commit_timestamp`` across increasing
    ``_commit_version``.
-2. (low) the r20 id-mode face's staged parquet write pins
-   ``spark.sql.parquet.fieldId.write.enabled=true`` around the write
-   (and restores the session value): a session/env override to false
-   no longer produces field-id-less footers that would surface as a
-   hash mismatch far from the cause.
 """
 
 from __future__ import annotations
@@ -146,27 +140,3 @@ def test_cleaned_fallback_monotone_property(spark, tmp_path):
         assert ts == sorted(ts), (cleaned, seq)
 
     run()
-
-
-def test_idmode_staging_pins_fieldid_write(spark):
-    """ADVICE r14 #2: with the session overridden to
-    fieldId.write.enabled=false, the scan-delta-idmode face must
-    still write field-id-carrying footers (conf pinned around the
-    staged write) and stay oracle-green; afterwards the session must
-    see its own override back, not the face's pin."""
-    from medallion_delta_lake_spark.plans import queries_r20 as r20
-    from tests.oracle import compare_query
-
-    key = "spark.sql.parquet.fieldId.write.enabled"
-    spark.conf.set(key, "false")
-    try:
-        compare_query(
-            spark,
-            "scan-delta-idmode",
-            r20.R20_QUERIES,
-            r20.R20_ORACLES,
-            "/root/testdata/sf0.001",
-        )
-        assert spark.conf.get(key) == "false"
-    finally:
-        spark.conf.unset(key)

@@ -336,3 +336,48 @@ def test_sync_upsert_rebases_only_past_file_free_commits(
             keys=["k"],
             delete_missing=True,
         )
+
+
+def _swapped_table(spark, path):
+    """``_two_file_table`` after renaming k→t, v→k, t→v: logical ``k``
+    is now stored as physical ``v`` (and logical ``v`` as physical
+    ``k``), so file stats name the other logical column."""
+    _two_file_table(spark, path)
+    for old, new in (("k", "t"), ("v", "k"), ("t", "v")):
+        delta_log.rename_column(path, old, new)
+
+
+def _append_logical_k2(spark, path):
+    """Commit logical (k=2, v=500): its stats read
+    ``minValues {"v": 2, "k": 500}`` under the physical names."""
+    delta_log.write_delta(
+        spark, _src(spark, [(2, 500)]), path, mode="append"
+    )
+
+
+def test_delete_rebase_reads_physical_stats_after_rename_swap(
+    spark, tmp_path, monkeypatch
+):
+    """The interloper's file holds logical k=2, inside ``k <= 3``.
+    Judging it under the logical name would read physical ``k``'s
+    range (500) and rebase past it, leaving k=2 alive after a DELETE
+    committed later."""
+    t = str(tmp_path / "t")
+    _swapped_table(spark, t)
+    _race(monkeypatch, lambda: _append_logical_k2(spark, t))
+    with pytest.raises(delta_log.DeltaConcurrentWriteError):
+        delta_log.delete_delta_log(spark, t, [("k", "<=", 3)])
+    assert (2, 500) in _rows(spark, t)  # the append's commit stands
+
+
+def test_update_rebase_reads_physical_stats_after_rename_swap(
+    spark, tmp_path, monkeypatch
+):
+    t = str(tmp_path / "t")
+    _swapped_table(spark, t)
+    _race(monkeypatch, lambda: _append_logical_k2(spark, t))
+    with pytest.raises(delta_log.DeltaConcurrentWriteError):
+        delta_log.update_delta_log(
+            spark, t, [("k", "<=", 3)], {"v": "v * 10"}
+        )
+    assert (2, 500) in _rows(spark, t)

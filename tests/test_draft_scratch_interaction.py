@@ -1,31 +1,26 @@
 """Cross-face scratch isolation (the ADVICE r11 class, pinned as a
-test): several draft faces materialize scratch Delta/parquet tables
-under ONE shared parent dir (tempdir/mdls_r1N_{tag}_{pid}/{face}) and
-return LAZY DataFrames reading from it. A face build that deletes the
-SHARED parent (rather than only its own subdir) silently destroys
-every sibling face built before it — correct in per-face tests, wrong
-in exactly the batch pattern a driver run uses (build all, then
-evaluate all).
+test): every face that stages Delta/parquet tables writes them under
+ONE shared parent dir (``registry.scratch``: tempdir/mdls_{tag}_{pid}/
+{face}) and returns a LAZY DataFrame reading from it. A face build
+that deletes the SHARED parent (rather than only its own subdir)
+silently destroys every sibling face built before it — correct in
+per-face tests, wrong in exactly the batch pattern a harness run uses
+(build all, then evaluate all).
 
-This test reproduces the driver batch pattern across BOTH draft
-cohorts: build every face first (no evaluation), then evaluate them
-all and compare row counts against the DuckDB oracles. A rmtree
-regression to any face's scratch handling fails here even though
-every per-face test stays green."""
+This test reproduces that batch pattern over every registered
+face that stages scratch tables: build every face first (no
+evaluation), then evaluate them all and compare row counts against
+the DuckDB oracles. A rmtree regression to any face's scratch
+handling fails here even though every per-face test stays green."""
 
 from __future__ import annotations
+
+import inspect
 
 import duckdb
 
 from medallion_delta_lake_spark.catalog import TESTDATA_TABLES
-from medallion_delta_lake_spark.plans import queries_r13 as r13
-from medallion_delta_lake_spark.plans import queries_r14 as r14
-from medallion_delta_lake_spark.plans import queries_r15 as r15
-from medallion_delta_lake_spark.plans import queries_r16 as r16
-from medallion_delta_lake_spark.plans import queries_r17 as r17
-from medallion_delta_lake_spark.plans import queries_r18 as r18
-from medallion_delta_lake_spark.plans import queries_r19 as r19
-from medallion_delta_lake_spark.plans import queries_r20 as r20
+from medallion_delta_lake_spark.plans import registry
 
 import pytest
 
@@ -51,31 +46,17 @@ def _oracle_counts(oracles: dict[str, str]) -> dict[str, int]:
 
 def test_build_all_then_evaluate_all(spark):
     queries = {
-        **r13.R13_QUERIES,
-        **r14.R14_QUERIES,
-        **r15.R15_QUERIES,
-        **r16.R16_QUERIES,
-        **r17.R17_QUERIES,
-        **r18.R18_QUERIES,
-        **r19.R19_QUERIES,
-        **r20.R20_QUERIES,
+        name: fn
+        for name, fn in registry.QUERIES.items()
+        if "scratch(" in inspect.getsource(fn)
     }
-    oracles = {
-        **r13.R13_ORACLES,
-        **r14.R14_ORACLES,
-        **r15.R15_ORACLES,
-        **r16.R16_ORACLES,
-        **r17.R17_ORACLES,
-        **r18.R18_ORACLES,
-        **r19.R19_ORACLES,
-        **r20.R20_ORACLES,
-    }
+    assert len(queries) == 29
     # phase 1: build EVERY face before evaluating ANY — eager scratch
     # writes run now; the returned frames stay lazy
     built = {name: fn(spark, SF) for name, fn in sorted(queries.items())}
     # phase 2: evaluate all — each face's scratch data must have
     # survived every sibling build that came after it
-    expected = _oracle_counts(oracles)
+    expected = _oracle_counts({n: registry.ORACLES[n] for n in queries})
     wrong = {
         name: (df.count(), expected[name])
         for name, df in built.items()

@@ -163,11 +163,6 @@ ALLOWLIST: dict[tuple[str, str], tuple[int, str]] = {
         1,
         "decile frame — ≤10 rows (same shape as lift_deciles)",
     ),
-    ("plans/queries_r19.py", "ml_topk_agreement_q"): (
-        2,
-        "both over post-limit(50) frames — TakeOrderedAndProject "
-        "runs BEFORE the rank windows, ≤50 rows each",
-    ),
 }
 
 

@@ -8,10 +8,7 @@ surface; this AST lint fails the build when one appears.
 (Tests, pipelines' debug helpers, and the oracle harness are exempt
 — they run on bounded frames by construction and are not part of a
 registered face's execution path. ``bench.py`` times ``count()``
-only. The former single site — the bounded ``toPandas`` staging in
-plans/queries_r20.py's id-mode face — was converted to an
-executor-side ``write.parquet`` with ``parquet.field.id`` column
-metadata, so the allowlist below is EMPTY; keep it that way.)
+only. The allowlist below is EMPTY; keep it that way.)
 """
 
 from __future__ import annotations

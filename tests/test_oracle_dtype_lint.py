@@ -43,80 +43,9 @@ def con():
     return c
 
 
-def _all_oracles() -> dict[str, str]:
-    """Registered oracles plus any UNREGISTERED draft cohort — drafts
-    are linted too so the HUGEINT class can't re-enter through a
-    pre-built face (2 of the 14 r11 drafts carried it latently)."""
-    out = dict(entry.oracle_sql())
-    try:
-        from medallion_delta_lake_spark.plans import queries_r12
-
-        for k, v in queries_r12.R12_ORACLES.items():
-            out.setdefault(f"draft:{k}", v)
-    except ImportError:
-        pass
-    try:
-        from medallion_delta_lake_spark.plans import queries_r13
-
-        for k, v in queries_r13.R13_ORACLES.items():
-            out.setdefault(f"draft:{k}", v)
-    except ImportError:
-        pass
-    try:
-        from medallion_delta_lake_spark.plans import queries_r14
-
-        for k, v in queries_r14.R14_ORACLES.items():
-            out.setdefault(f"draft:{k}", v)
-    except ImportError:
-        pass
-    try:
-        from medallion_delta_lake_spark.plans import queries_r15
-
-        for k, v in queries_r15.R15_ORACLES.items():
-            out.setdefault(f"draft:{k}", v)
-    except ImportError:
-        pass
-    try:
-        from medallion_delta_lake_spark.plans import queries_r16
-
-        for k, v in queries_r16.R16_ORACLES.items():
-            out.setdefault(f"draft:{k}", v)
-    except ImportError:
-        pass
-    try:
-        from medallion_delta_lake_spark.plans import queries_r17
-
-        for k, v in queries_r17.R17_ORACLES.items():
-            out.setdefault(f"draft:{k}", v)
-    except ImportError:
-        pass
-    try:
-        from medallion_delta_lake_spark.plans import queries_r18
-
-        for k, v in queries_r18.R18_ORACLES.items():
-            out.setdefault(f"draft:{k}", v)
-    except ImportError:
-        pass
-    try:
-        from medallion_delta_lake_spark.plans import queries_r19
-
-        for k, v in queries_r19.R19_ORACLES.items():
-            out.setdefault(f"draft:{k}", v)
-    except ImportError:
-        pass
-    try:
-        from medallion_delta_lake_spark.plans import queries_r20
-
-        for k, v in queries_r20.R20_ORACLES.items():
-            out.setdefault(f"draft:{k}", v)
-    except ImportError:
-        pass
-    return out
-
-
 def test_no_hugeint_oracle_outputs(con):
     problems: list[str] = []
-    for name, sql in sorted(_all_oracles().items()):
+    for name, sql in sorted(entry.oracle_sql().items()):
         try:
             rel = con.sql(sql)  # binds + plans; does not execute
             types = [str(t).upper() for t in rel.types]

@@ -1,32 +1,28 @@
-"""Round-14-cohort faces (plans/queries_r14.py, registered in ROUND
-13 alongside the r13 cohort per VERDICT r12 #1): every face must be
-oracle-green at two SFs, and the whole cohort must be present in the
-registry with byte-identical oracle strings."""
+"""Round-14-cohort faces (plans/queries_r14.py): every face must be
+oracle-green at two SFs, and the cohort's 10 faces must reach the
+entry point through ``@query``, each with its oracle. Faces are selected
+from the registry by the module that defines the callable."""
 
 from __future__ import annotations
 
 import pytest
 
-from medallion_delta_lake_spark.plans import queries_r14 as r14
-from tests.oracle import compare_query
+import __spark_entry__ as entry
+from medallion_delta_lake_spark.plans import registry
+from tests.oracle import compare_query, registered_faces
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+R14 = registered_faces("queries_r14")
 
 
 def test_r14_cohort_registered():
-    from medallion_delta_lake_spark.plans import registry
-
-    missing = set(r14.R14_QUERIES) - set(registry.QUERIES)
-    assert not missing, f"r14 faces not registered: {sorted(missing)}"
-    drift = [
-        n
-        for n, sql in r14.R14_ORACLES.items()
-        if registry.ORACLES.get(n) != sql
-    ]
-    assert not drift, f"registered oracle drifted from module: {drift}"
+    assert len(R14) == 10, R14
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    missing = [n for n in R14 if n not in queries or not oracles.get(n)]
+    assert not missing, f"r14 faces without entry or oracle: {missing}"
 
 
-@pytest.mark.parametrize("name", sorted(r14.R14_QUERIES))
+@pytest.mark.parametrize("name", R14)
 @pytest.mark.parametrize("sf", SFS)
 def test_draft_oracle_green(spark, name, sf):
-    compare_query(spark, name, r14.R14_QUERIES, r14.R14_ORACLES, sf)
+    compare_query(spark, name, registry.QUERIES, registry.ORACLES, sf)

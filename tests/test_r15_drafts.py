@@ -1,32 +1,28 @@
-"""Round-15-cohort faces (plans/queries_r15.py, registered in ROUND
-14 alongside the r16 cohort per VERDICT r13 #1): every face must be
-oracle-green at two SFs, and the whole cohort must be present in the
-registry with byte-identical oracle strings."""
+"""Round-15-cohort faces (plans/queries_r15.py): every face must be
+oracle-green at two SFs, and the cohort's 10 faces must reach the
+entry point through ``@query``, each with its oracle. Faces are selected
+from the registry by the module that defines the callable."""
 
 from __future__ import annotations
 
 import pytest
 
-from medallion_delta_lake_spark.plans import queries_r15 as r15
-from tests.oracle import compare_query
+import __spark_entry__ as entry
+from medallion_delta_lake_spark.plans import registry
+from tests.oracle import compare_query, registered_faces
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+R15 = registered_faces("queries_r15")
 
 
 def test_r15_cohort_registered():
-    from medallion_delta_lake_spark.plans import registry
-
-    missing = set(r15.R15_QUERIES) - set(registry.QUERIES)
-    assert not missing, f"r15 faces not registered: {sorted(missing)}"
-    drift = [
-        n
-        for n, sql in r15.R15_ORACLES.items()
-        if registry.ORACLES.get(n) != sql
-    ]
-    assert not drift, f"registered oracle drifted from module: {drift}"
+    assert len(R15) == 10, R15
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    missing = [n for n in R15 if n not in queries or not oracles.get(n)]
+    assert not missing, f"r15 faces without entry or oracle: {missing}"
 
 
-@pytest.mark.parametrize("name", sorted(r15.R15_QUERIES))
+@pytest.mark.parametrize("name", R15)
 @pytest.mark.parametrize("sf", SFS)
 def test_draft_oracle_green(spark, name, sf):
-    compare_query(spark, name, r15.R15_QUERIES, r15.R15_ORACLES, sf)
+    compare_query(spark, name, registry.QUERIES, registry.ORACLES, sf)

@@ -1,4 +1,4 @@
-"""Operator/plan laws behind the r16 draft faces:
+"""Operator/plan laws behind the queries_r16 faces:
 
 - join-bucketed-colocated's WHOLE POINT is physical: the orderkey
   join over the two bucketed tables must plan with NO Exchange on
@@ -20,9 +20,10 @@ SF = "/root/testdata/sf0.001"
 
 def test_bucketed_join_plans_without_exchange(spark):
     from medallion_delta_lake_spark.plans import queries_r16 as r16
+    from medallion_delta_lake_spark.plans import registry
 
     # building the face writes the bucketed tables
-    r16.R16_QUERIES["join-bucketed-colocated"](spark, SF)
+    registry.QUERIES["join-bucketed-colocated"](spark, SF)
     j = r16.bucketed_join_frame(spark, SF)
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan or "Join" in plan
@@ -35,11 +36,11 @@ def test_bucketed_join_plans_without_exchange(spark):
 
 
 def test_kcore_peel_monotone_and_exact_small(spark):
-    from medallion_delta_lake_spark.plans import queries_r16 as r16
+    from medallion_delta_lake_spark.plans import registry
 
     rows = {
         r["round"]: (r["n_nodes"], r["n_edges"])
-        for r in r16.R16_QUERIES["graph-kcore-peel"](
+        for r in registry.QUERIES["graph-kcore-peel"](
             spark, SF
         ).collect()
     }

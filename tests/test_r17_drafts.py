@@ -1,32 +1,28 @@
-"""Round-17-cohort faces (plans/queries_r17.py, registered in ROUND
-15 alongside the r18 cohort per VERDICT r14 #1): every face must be
-oracle-green at two SFs, and the whole cohort must be present in the
-registry with byte-identical oracle strings."""
+"""Round-17-cohort faces (plans/queries_r17.py): every face must be
+oracle-green at two SFs, and the cohort's 10 faces must reach the
+entry point through ``@query``, each with its oracle. Faces are selected
+from the registry by the module that defines the callable."""
 
 from __future__ import annotations
 
 import pytest
 
-from medallion_delta_lake_spark.plans import queries_r17 as r17
-from tests.oracle import compare_query
+import __spark_entry__ as entry
+from medallion_delta_lake_spark.plans import registry
+from tests.oracle import compare_query, registered_faces
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+R17 = registered_faces("queries_r17")
 
 
 def test_r17_cohort_registered():
-    from medallion_delta_lake_spark.plans import registry
-
-    missing = set(r17.R17_QUERIES) - set(registry.QUERIES)
-    assert not missing, f"r17 faces not registered: {sorted(missing)}"
-    drift = [
-        n
-        for n, sql in r17.R17_ORACLES.items()
-        if registry.ORACLES.get(n) != sql
-    ]
-    assert not drift, f"registered oracle drifted from module: {drift}"
+    assert len(R17) == 10, R17
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    missing = [n for n in R17 if n not in queries or not oracles.get(n)]
+    assert not missing, f"r17 faces without entry or oracle: {missing}"
 
 
-@pytest.mark.parametrize("name", sorted(r17.R17_QUERIES))
+@pytest.mark.parametrize("name", R17)
 @pytest.mark.parametrize("sf", SFS)
 def test_draft_oracle_green(spark, name, sf):
-    compare_query(spark, name, r17.R17_QUERIES, r17.R17_ORACLES, sf)
+    compare_query(spark, name, registry.QUERIES, registry.ORACLES, sf)

@@ -12,11 +12,11 @@ this pin fails the build before the bench does."""
 
 from __future__ import annotations
 
-from medallion_delta_lake_spark.plans import queries_r17 as r17
+from medallion_delta_lake_spark.plans import registry
 
 
 def test_bfs_face_lineage_is_linear(spark):
-    df = r17.R17_QUERIES["graph-bfs-distance"](
+    df = registry.QUERIES["graph-bfs-distance"](
         spark, "/root/testdata/sf0.001"
     )
     plan = df._jdf.queryExecution().optimizedPlan().toString()
