@@ -3,7 +3,7 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "cores": ...}.
 
 Each query is timed as a full cold plan → action (count via a no-op
 write would hide row materialization; we use ``df.count()`` after a
@@ -64,7 +64,10 @@ def _cpu_ticks() -> tuple[int, int]:
 
 
 def diverts_from_reference(
-    prev_steal: float | None, new_steal: float | None
+    prev_steal: float | None,
+    new_steal: float | None,
+    prev_cores: int | None,
+    new_cores: int | None,
 ) -> bool:
     """True when a run must not overwrite the existing reference.
 
@@ -73,9 +76,11 @@ def diverts_from_reference(
     0.05%-steal gated reference. Such runs go to
     bench_results/adhoc/ (never committed as references). Unknown steal
     counts as contended: a run whose steal could not be read is
-    diverted, and a reference without one may be replaced.
+    diverted, and a reference without one may be replaced. A run on
+    another core count than the reference's, or against a reference
+    that does not record one, is not comparable and is diverted too.
     """
-    if new_steal is None:
+    if new_steal is None or prev_cores is None or prev_cores != new_cores:
         return True
     if prev_steal is None:
         return False
@@ -118,6 +123,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cores": spark.sparkContext.defaultParallelism,
     }
     if total1 > total0:
         out["host_steal_pct"] = round(
@@ -146,17 +152,19 @@ def main() -> None:
     if target.exists():
         try:
             with open(target) as f:
-                prev_steal = json.load(f).get("host_steal_pct")
+                prev = json.load(f)
+            prev_steal, prev_cores = prev.get("host_steal_pct"), prev.get("cores")
         except (OSError, ValueError, AttributeError):
-            prev_steal = None
+            prev_steal = prev_cores = None
         new_steal = out.get("host_steal_pct")
-        if diverts_from_reference(prev_steal, new_steal):
+        if diverts_from_reference(prev_steal, new_steal, prev_cores, out["cores"]):
             adhoc = results_dir / "adhoc"
             adhoc.mkdir(exist_ok=True)
             n = len(list(adhoc.glob(f"r{int(rnd):02d}_steal*.json")))
             target = adhoc / f"r{int(rnd):02d}_steal{new_steal}_{n}.json"
             print(
-                f"[bench] steal {new_steal}% vs reference {prev_steal}%:"
+                f"[bench] steal {new_steal}% on {out['cores']} cores vs"
+                f" reference {prev_steal}% on {prev_cores}:"
                 f" writing {target} instead of {fname}",
                 file=sys.stderr,
             )

@@ -29,9 +29,11 @@ value-hash comparison against DuckDB is exact, not approximate):
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import json
 import os
+import shutil
 import stat
 import tempfile
 import threading
@@ -60,16 +62,29 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
+_SCRATCH_PARENTS: set[str] = set()
+
+
+def _remove_scratch_parent(parent: str, pid: int) -> None:
+    # a forked child inherits this hook; only the process that handed
+    # the parent out removes it
+    if os.getpid() == pid:
+        shutil.rmtree(parent, ignore_errors=True)
+
+
 def scratch(sf_dir: str, name: str) -> str:
     """Scratch path for the tables a face stages: one parent per
     (SF, process), so two processes over one SF (a harness run beside
     a local sweep) never race on a table path, and one subdirectory
     ``name`` per face. A face clears only its own subdirectory: the
-    frames its siblings returned still read lazily from theirs."""
+    frames its siblings returned still read lazily from theirs. The
+    process removes each parent it handed out when it exits."""
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(
-        tempfile.gettempdir(), f"mdls_{tag}_{os.getpid()}", name
-    )
+    parent = os.path.join(tempfile.gettempdir(), f"mdls_{tag}_{os.getpid()}")
+    if parent not in _SCRATCH_PARENTS:
+        _SCRATCH_PARENTS.add(parent)
+        atexit.register(_remove_scratch_parent, parent, os.getpid())
+    return os.path.join(parent, name)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

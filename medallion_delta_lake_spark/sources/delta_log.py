@@ -678,29 +678,56 @@ def _schema_type_features(schema) -> set[str]:
     return out
 
 
-def _type_feature_upgrade(proto: dict | None, schema) -> dict | None:
-    """Protocol action adopting any type-required features the
-    evolved ``schema`` needs that ``proto`` does not yet declare
-    (None when nothing is missing). Legacy implied writer features
-    are preserved through the v7 upgrade, same as every other
-    feature-adoption path."""
-    feats = _schema_type_features(schema)
-    if not feats:
-        return None
+def _upgrade_protocol(proto: dict | None, features) -> dict | None:
+    """The protocol action that adds ``features`` to ``proto`` (None
+    when ``proto`` already supports them) — the one rule every feature
+    adoption goes through, so no upgrade drops a feature the table
+    already had.
+
+    What a protocol supports: reader v2 implies ``columnMapping`` and
+    reader v3 lists its ``readerFeatures``; a legacy writer version
+    implies the features of every version up to it and writer v7 lists
+    its ``writerFeatures``. A legacy table (writer < 7) whose requested
+    features all have a legacy version rises to the smallest legacy
+    (reader, writer) pair covering them. Otherwise the table goes to
+    writer v7 listing every writer feature it supported plus
+    ``features``; a requested reader-writer feature (the
+    ``_SUPPORTED_READER_FEATURES``), or a table already at reader v3,
+    takes reader v3 listing every reader feature it supported plus
+    those. Else the reader version stays and no ``readerFeatures`` key
+    is written."""
     proto = proto or {"minReaderVersion": 1, "minWriterVersion": 2}
-    rf = set(proto.get("readerFeatures") or [])
-    wf = set(proto.get("writerFeatures") or [])
-    if feats <= rf and feats <= wf:
-        return None
+    features = set(features)
+    rv = proto.get("minReaderVersion", 1)
     wv = proto.get("minWriterVersion", 2)
-    if wv < 7:
-        for lv in range(2, wv + 1):
-            wf |= _LEGACY_WRITER_FEATURES.get(lv, set())
+    legacy = {f: v for v, fs in _LEGACY_WRITER_FEATURES.items() for f in fs}
+    if rv >= 3:
+        reader = set(proto.get("readerFeatures") or [])
+    else:
+        reader = {"columnMapping"} if rv == 2 else set()
+    if wv >= 7:
+        writer = set(proto.get("writerFeatures") or [])
+    else:
+        writer = {f for f, v in legacy.items() if v <= wv}
+    reader_side = features & _SUPPORTED_READER_FEATURES
+    if features <= writer and reader_side <= reader:
+        return None
+    if wv < 7 and features <= legacy.keys():
+        return {
+            "minReaderVersion": max(rv, 2) if reader_side else rv,
+            "minWriterVersion": max(wv, *(legacy[f] for f in features)),
+        }
+    if reader_side or rv >= 3:
+        return {
+            "minReaderVersion": 3,
+            "minWriterVersion": 7,
+            "readerFeatures": sorted(reader | reader_side),
+            "writerFeatures": sorted(writer | features),
+        }
     return {
-        "minReaderVersion": 3,
+        "minReaderVersion": rv,
         "minWriterVersion": 7,
-        "readerFeatures": sorted(rf | feats),
-        "writerFeatures": sorted(wf | feats),
+        "writerFeatures": sorted(writer | features),
     }
 
 
@@ -775,40 +802,17 @@ def _apply_in_commit_timestamp(
         proto_a = next(
             (a for a in actions if a.get("protocol")), None
         )
-        if proto_a is None:
-            proto = (resolve_snapshot(path).get("protocol") or {}) if (
-                version > 0
-            ) else {}
-            proto_a = {
-                "protocol": {
-                    "minReaderVersion": proto.get("minReaderVersion", 1),
-                    "minWriterVersion": proto.get("minWriterVersion", 2),
-                    **(
-                        {"readerFeatures": proto["readerFeatures"]}
-                        if proto.get("readerFeatures")
-                        else {}
-                    ),
-                    **(
-                        {"writerFeatures": proto["writerFeatures"]}
-                        if proto.get("writerFeatures")
-                        else {}
-                    ),
-                }
-            }
-            actions = [proto_a, *actions]
-        p = proto_a["protocol"]
-        if (
-            p.get("minWriterVersion", 2) < 7
-            or "inCommitTimestamp"
-            not in (p.get("writerFeatures") or [])
-        ):
-            wf = set(p.get("writerFeatures") or [])
-            wv = p.get("minWriterVersion", 2)
-            if wv < 7:
-                for lv in range(2, wv + 1):
-                    wf |= _LEGACY_WRITER_FEATURES.get(lv, set())
-            p["minWriterVersion"] = 7
-            p["writerFeatures"] = sorted(wf | {"inCommitTimestamp"})
+        if proto_a is not None:
+            proto = proto_a["protocol"]
+        elif version > 0:
+            proto = resolve_snapshot(path).get("protocol")
+        else:
+            proto = None
+        up = _upgrade_protocol(proto, {"inCommitTimestamp"})
+        if up is not None and proto_a is not None:
+            proto_a["protocol"] = up
+        elif up is not None:
+            actions = [{"protocol": up}, *actions]
 
     # spec: with ICT enabled, commitInfo must be the first action
     others = [a for a in actions if a is not ci_action]
@@ -864,32 +868,13 @@ def set_clustering_columns(
     if any(c in part_cols for c in cols):
         raise ValueError("cannot cluster by a partition column")
 
-    proto = snap.get("protocol") or {
-        "minReaderVersion": 1,
-        "minWriterVersion": 2,
-    }
-    wf = set(proto.get("writerFeatures") or [])
-    wv = proto.get("minWriterVersion", 2)
-    need_upgrade = not {"clustering", "domainMetadata"} <= wf
-    if need_upgrade and wv < 7:
-        for lv in range(2, wv + 1):
-            wf |= _LEGACY_WRITER_FEATURES.get(lv, set())
-    new_proto = {
-        "minReaderVersion": proto.get("minReaderVersion", 1),
-        "minWriterVersion": 7,
-        **(
-            {"readerFeatures": proto["readerFeatures"]}
-            if proto.get("readerFeatures")
-            else {}
-        ),
-        "writerFeatures": sorted(
-            wf | {"clustering", "domainMetadata"}
-        ),
-    }
+    new_proto = _upgrade_protocol(
+        snap.get("protocol"), {"clustering", "domainMetadata"}
+    )
 
     def build(version: int) -> list[dict]:
         actions: list[dict] = []
-        if need_upgrade:
+        if new_proto is not None:
             actions.append({"protocol": new_proto})
         actions.append(
             {
@@ -1063,27 +1048,9 @@ def enable_row_tracking(path: str) -> int:
     )
     new_meta["configuration"] = conf
 
-    proto = snap.get("protocol") or {
-        "minReaderVersion": 1,
-        "minWriterVersion": 2,
-    }
-    wf = set(proto.get("writerFeatures") or [])
-    wv = proto.get("minWriterVersion", 2)
-    if wv < 7:
-        for lv in range(2, wv + 1):
-            wf |= _LEGACY_WRITER_FEATURES.get(lv, set())
-    new_proto = {
-        "minReaderVersion": proto.get("minReaderVersion", 1),
-        "minWriterVersion": 7,
-        **(
-            {"readerFeatures": proto["readerFeatures"]}
-            if proto.get("readerFeatures")
-            else {}
-        ),
-        "writerFeatures": sorted(
-            wf | {"rowTracking", "domainMetadata"}
-        ),
-    }
+    new_proto = _upgrade_protocol(
+        snap.get("protocol"), {"rowTracking", "domainMetadata"}
+    )
 
     def build(_v: int) -> list[dict]:
         # BACKFILL: re-add every live file (dataChange=false, content
@@ -1095,7 +1062,7 @@ def enable_row_tracking(path: str) -> int:
             for _rel, add in sorted(snap["files"].items())
         ]
         return [
-            {"protocol": new_proto},
+            *([{"protocol": new_proto}] if new_proto else []),
             {"metaData": new_meta},
             *readds,
             {
@@ -2264,30 +2231,13 @@ def set_column_default(
     new_meta = dict(meta)
     new_meta["schemaString"] = StructType(new_fields).json()
 
-    proto = snap.get("protocol") or {
-        "minReaderVersion": 1,
-        "minWriterVersion": 2,
-    }
-    wf = set(proto.get("writerFeatures") or [])
-    wv = proto.get("minWriterVersion", 2)
-    need_upgrade = "allowColumnDefaults" not in wf
-    if need_upgrade and wv < 7:
-        for lv in range(2, wv + 1):
-            wf |= _LEGACY_WRITER_FEATURES.get(lv, set())
-    new_proto = {
-        "minReaderVersion": proto.get("minReaderVersion", 1),
-        "minWriterVersion": 7,
-        **(
-            {"readerFeatures": proto["readerFeatures"]}
-            if proto.get("readerFeatures")
-            else {}
-        ),
-        "writerFeatures": sorted(wf | {"allowColumnDefaults"}),
-    }
+    new_proto = _upgrade_protocol(
+        snap.get("protocol"), {"allowColumnDefaults"}
+    )
 
     def build(version: int) -> list[dict]:
         actions: list[dict] = []
-        if need_upgrade:
+        if new_proto is not None:
             actions.append({"protocol": new_proto})
         actions.append({"metaData": new_meta})
         actions.append(
@@ -2436,29 +2386,10 @@ def alter_column_type(path: str, col: str, new_type: str) -> int:
             "or misread existing files)"
         )
 
-    proto = snap.get("protocol") or {
-        "minReaderVersion": 1,
-        "minWriterVersion": 2,
-    }
-    rf = set(proto.get("readerFeatures") or [])
-    wf = set(proto.get("writerFeatures") or [])
-    wv = proto.get("minWriterVersion", 2)
-    if wv < 7:
-        for lv in range(2, wv + 1):
-            wf |= _LEGACY_WRITER_FEATURES.get(lv, set())
     need = {"typeWidening"}
     if dst.typeName() == "timestamp_ntz":
         need.add("timestampNtz")
-    new_proto = {
-        "minReaderVersion": 3,
-        "minWriterVersion": 7,
-        "readerFeatures": sorted(rf | need),
-        "writerFeatures": sorted(wf | need),
-    }
-    need_upgrade = not (
-        need <= rf
-        and need <= set(proto.get("writerFeatures") or [])
-    )
+    new_proto = _upgrade_protocol(snap.get("protocol"), need)
 
     def build(version: int) -> list[dict]:
         changes = list(md.get("delta.typeChanges") or [])
@@ -2480,7 +2411,7 @@ def alter_column_type(path: str, col: str, new_type: str) -> int:
         new_meta = dict(meta)
         new_meta["schemaString"] = StructType(new_fields).json()
         actions: list[dict] = []
-        if need_upgrade:
+        if new_proto is not None:
             actions.append({"protocol": new_proto})
         actions.append({"metaData": new_meta})
         actions.append(
@@ -2557,20 +2488,40 @@ def _enforce_invariants(df: DataFrame, meta: dict | None, path: str) -> None:
         )
 
 
+# table properties that turn a table feature on when set to "true";
+# delta.enableInCommitTimestamps adopts its feature in
+# _apply_in_commit_timestamp, on every commit that enables it
+_PROPERTY_FEATURES = {
+    "delta.appendOnly": "appendOnly",
+    "delta.enableChangeDataFeed": "changeDataFeed",
+}
+
+
 def set_table_properties(path: str, props: dict[str, str]) -> int:
     """ALTER TABLE SET TBLPROPERTIES for a log-backed table: commit an
     updated metaData whose configuration carries ``props`` — the entry
-    point for ``delta.appendOnly`` and any other table property. The
-    protocol action is metadata-only (no file I/O); enforcement
-    happens on later writes. Returns the committed version."""
+    point for ``delta.appendOnly`` and any other table property. A
+    property that turns a table feature on (``_PROPERTY_FEATURES``)
+    adopts it in the same commit. Metadata-only (no file I/O);
+    enforcement happens on later writes. Returns the committed
+    version."""
     snap = resolve_snapshot(path)
     meta = dict(snap["meta"] or {})
     conf = dict(meta.get("configuration") or {})
     conf.update(props)
     meta["configuration"] = conf
+    new_proto = _upgrade_protocol(
+        snap.get("protocol"),
+        {
+            feature
+            for prop, feature in _PROPERTY_FEATURES.items()
+            if str(props.get(prop, "")).lower() == "true"
+        },
+    )
 
     def build(version: int) -> list[dict]:
         return [
+            *([{"protocol": new_proto}] if new_proto else []),
             {"metaData": meta},
             {
                 "commitInfo": {
@@ -2610,25 +2561,12 @@ def add_check_constraint(
     conf = dict(new_meta.get("configuration") or {})
     conf[f"delta.constraints.{name}"] = expr
     new_meta["configuration"] = conf
-    proto = snap.get("protocol") or {}
+    new_proto = _upgrade_protocol(snap.get("protocol"), {"checkConstraints"})
 
     def build(version: int) -> list[dict]:
         actions: list[dict] = []
-        if (
-            proto.get("minWriterVersion", 2) < 3
-            and proto.get("minReaderVersion", 1) < 3
-        ):
-            # checkConstraints = writer version 3 (legacy numbering)
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": proto.get(
-                            "minReaderVersion", 1
-                        ),
-                        "minWriterVersion": 3,
-                    }
-                }
-            )
+        if new_proto is not None:
+            actions.append({"protocol": new_proto})
         actions.append({"metaData": new_meta})
         actions.append(
             {
@@ -2771,6 +2709,7 @@ def write_delta(
     import time as _time
     import uuid
 
+    started = _time.monotonic()
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unsupported mode: {mode}")
 
@@ -2871,26 +2810,16 @@ def write_delta(
                 (f.metadata or {}).get("delta.generationExpression")
                 for f in df.schema.fields
             )
-            base_wv = 4 if has_gen else 2
-            type_feats = _schema_type_features(df.schema)
-            if type_feats:
-                # VARIANT / TIMESTAMP_NTZ columns require a features
-                # protocol from the very first commit
-                wf: set[str] = set()
-                for lv in range(2, base_wv + 1):
-                    wf |= _LEGACY_WRITER_FEATURES.get(lv, set())
-                proto = {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(type_feats),
-                    "writerFeatures": sorted(wf | type_feats),
-                }
-            else:
-                proto = {
-                    "minReaderVersion": 1,
-                    "minWriterVersion": base_wv,
-                }
-            actions.append({"protocol": proto})
+            base = {
+                "minReaderVersion": 1,
+                "minWriterVersion": 4 if has_gen else 2,
+            }
+            # VARIANT / TIMESTAMP_NTZ columns require a features
+            # protocol from the very first commit
+            proto = _upgrade_protocol(
+                base, _schema_type_features(df.schema)
+            )
+            actions.append({"protocol": proto or base})
             actions.append(
                 {
                     "metaData": {
@@ -2906,8 +2835,8 @@ def write_delta(
         elif mode == "overwrite":
             prior = resolve_snapshot(path, version_as_of=version - 1)
             if evolve or evolved_meta is not None:
-                up = _type_feature_upgrade(
-                    prior.get("protocol"), df.schema
+                up = _upgrade_protocol(
+                    prior.get("protocol"), _schema_type_features(df.schema)
                 )
                 if up is not None:
                     actions.append({"protocol": up})
@@ -2929,13 +2858,36 @@ def write_delta(
             # the same commit as the adds (real Delta's behavior);
             # a merged-in VARIANT / NTZ column upgrades the protocol
             # in that same commit
-            up = _type_feature_upgrade(
-                (snap or {}).get("protocol"), df.schema
+            up = _upgrade_protocol(
+                (snap or {}).get("protocol"), _schema_type_features(df.schema)
             )
             if up is not None:
                 actions.append({"protocol": up})
             actions.append({"metaData": evolved_meta})
         actions.extend(adds)
+        if version == 0:
+            # the creating commit keeps its protocol + metaData + adds
+            # shape (tests/test_delta_log_reader.py pins it)
+            return actions
+        actions.append(
+            {
+                "commitInfo": {
+                    "operation": "WRITE",
+                    "operationParameters": {
+                        "mode": mode.capitalize(),
+                        "partitionBy": json.dumps(partition_by),
+                    },
+                    "operationMetrics": _operation_metrics(
+                        started,
+                        numFiles=len(adds),
+                        numOutputRows=sum(
+                            _add_num_records(a["add"]) or 0 for a in adds
+                        ),
+                        numOutputBytes=sum(a["add"]["size"] for a in adds),
+                    ),
+                }
+            }
+        )
         return actions
 
     # overwrites computed their remove set (and callers their data)
@@ -3123,7 +3075,6 @@ def _merge_commit(
         ]
         actions.extend(adds)
         actions.extend(cdc_actions)
-        metrics["executionTimeMs"] = int((_time.monotonic() - started) * 1000)
         actions.append(
             {
                 "commitInfo": {
@@ -3132,10 +3083,9 @@ def _merge_commit(
                         **parameters,
                         "filesRewritten": len(touched),
                     },
-                    # Delta's shape: every metric value is a string
-                    "operationMetrics": {
-                        k: str(v) for k, v in metrics.items()
-                    },
+                    "operationMetrics": _operation_metrics(
+                        started, **metrics
+                    ),
                 }
             }
         )
@@ -3298,6 +3248,16 @@ def _add_num_records(add: dict) -> int | None:
     return json.loads(stats).get("numRecords") if stats else None
 
 
+def _operation_metrics(started: float, **metrics) -> dict[str, str]:
+    """A commitInfo's Delta-style ``operationMetrics``: every value a
+    string, plus ``executionTimeMs`` counted from ``started`` (a
+    ``time.monotonic()`` reading taken at the public call's start)."""
+    import time as _time
+
+    metrics["executionTimeMs"] = int((_time.monotonic() - started) * 1000)
+    return {k: str(v) for k, v in metrics.items()}
+
+
 def upsert_delta_log(
     spark: SparkSession,
     source: DataFrame,
@@ -3405,31 +3365,6 @@ def _file_num_records(path: str, rel: str, add: dict) -> int:
     return pq.ParquetFile(os.path.join(path, rel)).metadata.num_rows
 
 
-def _dv_protocol_actions(snap: dict) -> list[dict]:
-    """The protocol-upgrade action a commit must carry the first time
-    deletion vectors land in a table (PROTOCOL.md: DVs are a reader+
-    writer table feature, so minReaderVersion 3 / minWriterVersion 7
-    with the feature listed on both sides). Empty if the table already
-    advertises them."""
-    proto = snap.get("protocol") or {}
-    feats = set(proto.get("readerFeatures") or [])
-    if proto.get("minReaderVersion", 1) >= 3 and "deletionVectors" in feats:
-        return []
-    return [
-        {
-            "protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(feats | {"deletionVectors"}),
-                "writerFeatures": sorted(
-                    set(proto.get("writerFeatures") or [])
-                    | {"deletionVectors"}
-                ),
-            }
-        }
-    ]
-
-
 def delete_delta_log(
     spark: SparkSession,
     path: str,
@@ -3485,6 +3420,7 @@ def delete_delta_log(
 
     from medallion_delta_lake_spark.sources import deletion_vectors as _dv
 
+    started = _time.monotonic()
     if not filters:
         raise ValueError(
             "refusing DELETE with no predicate; use "
@@ -3613,8 +3549,16 @@ def delete_delta_log(
     if new_dvs:
         descriptors.update(_dv.write_dv_file(path, new_dvs))
 
+    # deletion vectors are a reader-writer table feature: the commit
+    # landing the table's first DV adopts it
+    dv_proto = (
+        _upgrade_protocol(snap.get("protocol"), {"deletionVectors"})
+        if descriptors
+        else None
+    )
+
     def build(version: int) -> list[dict]:
-        actions = _dv_protocol_actions(snap) if descriptors else []
+        actions = [{"protocol": dv_proto}] if dv_proto else []
         for rel in removes + rewrites:
             actions.append(
                 {"remove": _remove_action(rel, cand[rel], now_ms)}
@@ -3649,6 +3593,13 @@ def delete_delta_log(
                             [[c, op, str(v)] for c, op, v in filters]
                         )
                     },
+                    "operationMetrics": _operation_metrics(
+                        started,
+                        numRemovedFiles=len(removes) + len(rewrites),
+                        numAddedFiles=len(rewrite_adds),
+                        numDeletedRows=deleted_rows,
+                        numDeletionVectorsAdded=len(descriptors),
+                    ),
                 }
             }
         )
@@ -3712,6 +3663,7 @@ def optimize_delta_log(
     import math
     import time as _time
 
+    started = _time.monotonic()
     snap = resolve_snapshot(path)
     meta = snap["meta"]
     if meta is None:
@@ -3885,6 +3837,13 @@ def optimize_delta_log(
                     "operationParameters": {
                         "zOrderBy": json.dumps(zorder_by or [])
                     },
+                    "operationMetrics": _operation_metrics(
+                        started,
+                        numRemovedFiles=len(selected),
+                        numAddedFiles=len(adds),
+                        numRemovedBytes=total,
+                        numAddedBytes=sum(a["add"]["size"] for a in adds),
+                    ),
                 }
             }
         )
@@ -4218,8 +4177,8 @@ def restore_delta_log(path: str, version: int) -> dict:
 def table_history(path: str) -> list[dict]:
     """DESCRIBE HISTORY for a log-backed table: one entry per commit
     (newest first) with the operation name/parameters/metrics from
-    commitInfo (when present; only sync MERGE commits write metrics so
-    far, other entries carry None) and add/remove action counts — the
+    commitInfo (when present; WRITE, DELETE, UPDATE, OPTIMIZE and MERGE
+    commits carry metrics, other entries None) and add/remove action counts — the
     audit view the reference exposes through Delta's own
     ``DeltaTable.history()``."""
     log = _log_dir(path)
@@ -4288,27 +4247,12 @@ def write_checkpoint(
         raise ValueError("v2 checkpoints shard via sidecars, not parts")
     if v2:
         snap = resolve_snapshot(path)
-        proto = snap.get("protocol") or {}
-        feats = set(proto.get("readerFeatures") or [])
-        if not (
-            proto.get("minReaderVersion", 1) >= 3
-            and "v2Checkpoint" in feats
-        ):
-            upgraded = {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(feats | {"v2Checkpoint"}),
-                    "writerFeatures": sorted(
-                        set(proto.get("writerFeatures") or [])
-                        | {"v2Checkpoint"}
-                    ),
-                }
-            }
+        upgraded = _upgrade_protocol(snap.get("protocol"), {"v2Checkpoint"})
+        if upgraded is not None:
             _commit_version(
                 path,
                 lambda v: [
-                    upgraded,
+                    {"protocol": upgraded},
                     {
                         "commitInfo": {
                             "operation": "UPGRADE PROTOCOL",
@@ -4863,44 +4807,8 @@ def enable_column_mapping(path: str) -> int:
     new_meta["schemaString"] = StructType(new_fields).json()
     new_meta["configuration"] = conf
 
-    proto = snap.get("protocol") or {
-        "minReaderVersion": 1,
-        "minWriterVersion": 2,
-    }
-    actions: list[dict] = []
-    if proto.get("minReaderVersion", 1) >= 3:
-        feats_r = set(proto.get("readerFeatures") or [])
-        if "columnMapping" not in feats_r:
-            actions.append(
-                {
-                    "protocol": {
-                        **proto,
-                        "readerFeatures": sorted(
-                            feats_r | {"columnMapping"}
-                        ),
-                        "writerFeatures": sorted(
-                            set(proto.get("writerFeatures") or [])
-                            | {"columnMapping"}
-                        ),
-                    }
-                }
-            )
-    elif (
-        proto.get("minReaderVersion", 1) < 2
-        or proto.get("minWriterVersion", 2) < 5
-    ):
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": max(
-                        2, proto.get("minReaderVersion", 1)
-                    ),
-                    "minWriterVersion": max(
-                        5, proto.get("minWriterVersion", 2)
-                    ),
-                }
-            }
-        )
+    up = _upgrade_protocol(snap.get("protocol"), {"columnMapping"})
+    actions: list[dict] = [{"protocol": up}] if up else []
     actions.append({"metaData": new_meta})
     actions.append(
         {
@@ -5329,6 +5237,7 @@ def update_delta_log(
     directories via the normal hive staging."""
     import time as _time
 
+    started = _time.monotonic()
     if not filters:
         raise ValueError("refusing UPDATE with no predicate")
     for f in filters:
@@ -5460,6 +5369,12 @@ def update_delta_log(
                         ),
                         "filesRewritten": len(touched),
                     },
+                    "operationMetrics": _operation_metrics(
+                        started,
+                        numUpdatedRows=updated_rows,
+                        numAddedFiles=len(adds),
+                        numRemovedFiles=len(touched),
+                    ),
                 }
             }
         )

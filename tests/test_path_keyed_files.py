@@ -11,7 +11,9 @@ root. Each result is compared with an expected state built in plain
 Python. The sync MERGE's edge cases (a key held twice by the target, an
 empty source, a target with no files, a NULL key, a changed partition
 value), its ``operationMetrics``, its Spark job count and the release
-of its materialized join are pinned here too.
+of its materialized join are pinned here too, as are the
+``operationMetrics`` of WRITE, DELETE, UPDATE and OPTIMIZE commits
+and the job counts of the first three.
 """
 
 from __future__ import annotations
@@ -362,6 +364,82 @@ def test_sync_merge_jobs_and_released_blocks(spark, tmp_path, monkeypatch):
         _sync(spark, t, [(1, "x")])
     assert _cached_rdds(spark) <= before
     assert _state(spark, t, ("k", "v")) == [(1, "a"), (2, "c")]
+
+
+def test_dml_operation_metrics_add_no_job(spark, shared_basenames):
+    """WRITE, DELETE, UPDATE and OPTIMIZE commits carry Delta-named
+    ``operationMetrics``, taken from what each op already holds: the
+    staged adds' ``numRecords`` and ``size`` and the counts it
+    collected. They add no Spark job: an append is still one job, a
+    one-file deletion-vector DELETE five, a DELETE that removes,
+    rewrites and deletion-vectors files eight, an UPDATE five."""
+    t = shared_basenames
+
+    def metrics():
+        m = dict(dl.table_history(t)[0]["operationMetrics"])
+        assert int(m.pop("executionTimeMs")) >= 0
+        return m
+
+    def commit_adds():
+        return [
+            a["add"]
+            for a in _commit(t, dl.resolve_snapshot(t)["version"])
+            if "add" in a
+        ]
+
+    rows = spark.createDataFrame([(100, "p1", 5), (101, "p2", 6)], SCHEMA)
+    write = lambda: dl.write_delta(spark, rows.coalesce(1), t)  # noqa: E731
+    assert _jobs_launched(spark, write) == 1
+    adds = commit_adds()
+    assert metrics() == {
+        "numFiles": "2",
+        "numOutputRows": "2",
+        "numOutputBytes": str(sum(a["size"] for a in adds)),
+    }
+
+    res = {}
+    dv = lambda: res.update(dl.delete_delta_log(spark, t, [("id", "=", 4)]))  # noqa: E731
+    assert _jobs_launched(spark, dv) == 5
+    assert metrics() == {
+        "numRemovedFiles": "0",
+        "numAddedFiles": "0",
+        "numDeletedRows": "1",
+        "numDeletionVectorsAdded": "1",
+    }
+
+    mixed = lambda: res.update(dl.delete_delta_log(spark, t, [("v", "<", 200)]))  # noqa: E731
+    assert _jobs_launched(spark, mixed) == 8
+    assert res["files_removed"] and res["files_rewritten"] and res["files_with_new_dv"]
+    rewritten = [a for a in commit_adds() if not a.get("deletionVector")]
+    assert metrics() == {
+        "numRemovedFiles": str(res["files_removed"] + res["files_rewritten"]),
+        "numAddedFiles": str(len(rewritten)),
+        "numDeletedRows": str(res["deleted_rows"]),
+        "numDeletionVectorsAdded": str(res["files_with_new_dv"]),
+    }
+
+    update = lambda: res.update(  # noqa: E731
+        dl.update_delta_log(spark, t, [("id", ">", 20)], {"v": "v + 1"})
+    )
+    assert _jobs_launched(spark, update) == 5
+    assert metrics() == {
+        "numUpdatedRows": str(res["updated_rows"]),
+        "numAddedFiles": str(len(commit_adds())),
+        "numRemovedFiles": str(res["files_rewritten"]),
+    }
+
+    before = dl.resolve_snapshot(t)["files"]
+    res = dl.optimize_delta_log(spark, t, zorder_by=["id"])
+    adds = commit_adds()
+    assert metrics() == {
+        "numRemovedFiles": str(res["files_compacted"]),
+        "numAddedFiles": str(res["files_written"]),
+        "numRemovedBytes": str(sum(a["size"] for a in before.values())),
+        "numAddedBytes": str(sum(a["size"] for a in adds)),
+    }
+    assert [h["operation"] for h in dl.table_history(t)[:5]] == [
+        "OPTIMIZE", "UPDATE", "DELETE", "DELETE", "WRITE"
+    ]
 
 
 # ---------------------------------------------------------------------

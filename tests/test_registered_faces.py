@@ -13,7 +13,8 @@ every plans module eagerly.
   way;
 - faces that stage tables through ``registry.scratch`` never share a
   scratch subdirectory across faces, so a face clearing its own never
-  clears a sibling's.
+  clears a sibling's, and a process removes the scratch parents it
+  handed out when it exits.
 """
 
 from __future__ import annotations
@@ -72,6 +73,27 @@ def test_broken_plans_module_fails_import():
         check=True,
     ).stdout.strip()
     assert out == "ImportError", out
+
+
+def test_scratch_parent_removed_at_exit():
+    code = (
+        "import os\n"
+        "from medallion_delta_lake_spark.plans.registry import scratch\n"
+        "d = scratch('/data/sf0.01', 'face')\n"
+        "os.makedirs(d)\n"
+        "open(os.path.join(d, 'part.parquet'), 'w').write('x')\n"
+        "print(os.path.dirname(d))\n"
+    )
+    parent = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    ).stdout.strip()
+    assert Path(parent).name.startswith("mdls_"), parent
+    assert not Path(parent).exists(), parent
 
 
 def test_scratch_subdirectories_are_per_face():
